@@ -401,7 +401,12 @@ def lsh_portable_topk(
     q_rows = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
     ).collect()
-    qb_schema = "q_id bigint, table int, bucket bigint"
+    # q_id keeps the caller's id type: the re-rank joins it back to the
+    # query and candidate ids, which may be strings.
+    qb_schema = (
+        f"q_id {queries.schema[id_col].dataType.simpleString()}, "
+        "table int, bucket bigint"
+    )
     if q_rows:
         qv = np.stack(
             [np.asarray(r["qv"], dtype=np.float64) for r in q_rows]
@@ -423,7 +428,7 @@ def lsh_portable_topk(
         qb = local_df(
             queries.sparkSession,
             [
-                (int(r["q_id"]), t, int(B[i, t]))
+                (r["q_id"], t, int(B[i, t]))
                 for i, r in enumerate(q_rows)
                 for t in range(n_tables)
             ],
@@ -1029,7 +1034,14 @@ def _driver_query_buckets(
     library, machine, and single-thread BLAS pin, so bucket bits match —
     pinned by tests/test_dedup_similarity's equivalence test). Multiprobe
     XOR fan-out and its dedup happen in plain sets instead of an
-    explode + distinct exchange."""
+    explode + distinct exchange.
+
+    Contract: the driver and every executor's Python workers must use
+    the same floating-point math and BLAS build (numpy, BLAS library, one
+    BLAS thread). A dot within rounding of zero can take another sign
+    under another build or thread count, which moves a query to another
+    bucket than its candidates' and changes its candidate set. The
+    integer-exact lsh_portable_topk has no such dependency."""
     n_tables, n_bits = len(all_planes), len(all_planes[0])
     qids = sorted(qmap)
     if not qids:

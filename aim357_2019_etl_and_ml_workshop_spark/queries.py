@@ -173,7 +173,13 @@ def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     (~0.1-0.4s each — material when the driver loops the whole registry).
     The build itself runs outside the lock (it does py4j I/O); two racing
     threads may build the same reader twice, and last-insert wins — both
-    plans are equivalent, nothing leaks."""
+    plans are equivalent, nothing leaks. Also the source of the SQL
+    surface's temp views (sql_surface.register_views).
+
+    Contract: the files under sf_dir must be immutable for the life of
+    the memo. A memoized reader keeps the schema and file listing of its
+    first build, so rewriting a table in place needs
+    clear_reader_cache() first."""
     key = (spark, sf_dir, table)
     with _READER_CACHE_LOCK:
         df = _READER_CACHE.get(key)

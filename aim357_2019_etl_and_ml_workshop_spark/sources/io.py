@@ -149,6 +149,10 @@ def read_parquet_evolved(spark: SparkSession, path: str | list[str]) -> DataFram
 # partitioning choice the queries are value-independent of by
 # construction (the probe is already runtime-state-dependent), never a
 # result change. Bounded: cleared wholesale past 256 entries.
+# Contract: a plan's input files must be immutable for the life of the
+# memo. The key carries no file listing, so a table rewritten in place
+# under the same plan keeps its first split-count decision until the
+# memo is cleared.
 _SPREAD_PROBE_CACHE: dict = {}
 
 

@@ -13,15 +13,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import pin_session_conf
-from .sources.io import TESTDATA_TABLES, read_testdata
+from .sources.io import TESTDATA_TABLES
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view (catalog surface S5/S6
     for the session scope; persistent-catalog registration lives in
-    sources.io.register_catalog_table)."""
+    sources.io.register_catalog_table).
+
+    The views come from the registry's reader memo (queries._t), so only
+    the first call per (session, sf_dir) pays the ten parquet
+    schema-inference jobs; a repeat call starts no Spark job. Imported
+    lazily: queries imports this module inside its SQL-surface queries."""
+    from .queries import _t
+
     for t in TESTDATA_TABLES:
-        read_testdata(spark, sf_dir, t).createOrReplaceTempView(t)
+        _t(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def engine_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

@@ -297,6 +297,38 @@ def test_lsh_portable_topk_recall_vs_brute_force(spark, sf_dir):
     assert len(approx & exact) / len(exact) >= 0.7
 
 
+def test_lsh_portable_topk_keeps_string_ids(spark):
+    """lsh_portable_topk takes the id type from the query frame's schema.
+    String ids give the same neighbours as integer ids; zero-padded names
+    keep the c_id tiebreak order the same under both types."""
+    import math
+
+    from aim357_2019_etl_and_ml_workshop_spark.operators.similarity import (
+        lsh_portable_topk,
+    )
+
+    dim = 8
+    vecs = [
+        (i, [math.sin(i * 7 + j) / 2 for j in range(dim)]) for i in range(60)
+    ]
+    by_int = spark.createDataFrame(vecs, "vec_id bigint, v array<double>")
+    by_str = spark.createDataFrame(
+        [(f"v{i:03d}", v) for i, v in vecs], "vec_id string, v array<double>"
+    )
+    got_int = lsh_portable_topk(
+        by_int, by_int.where("vec_id % 10 = 0"), k=3, dim=dim
+    ).collect()
+    out_str = lsh_portable_topk(
+        by_str, by_str.where("vec_id LIKE '%0'"), k=3, dim=dim
+    )
+    assert out_str.schema["q_id"].dataType.simpleString() == "string"
+    got_str = {(r.q_id, r.c_id, r.sim) for r in out_str.collect()}
+    assert len(got_int) > 0
+    assert got_str == {
+        (f"v{r.q_id:03d}", f"v{r.c_id:03d}", r.sim) for r in got_int
+    }
+
+
 def test_ivf_portable_assignment_matches_int_reference(spark):
     """The portable IVF twin's load-bearing property (r11): cell
     assignment and probe sets are INTEGER-exact argmins of quantized

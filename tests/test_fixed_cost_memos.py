@@ -121,3 +121,20 @@ def test_ann_queries_footer_count_equals_distributed_count(spark, sf_dir):
     assert len(with_footer) > 0
     # the footer fast path actually fires for the testdata layout
     assert os.path.isfile(os.path.join(sf_dir, "embeddings.parquet"))
+
+
+def test_engine_sql_repeat_call_starts_no_build_jobs(spark, sf_dir):
+    """sql_surface.register_views builds its temp views from the reader
+    memo, so a repeat engine_sql call on the same (session, sf_dir)
+    starts no Spark job while it builds (each fresh parquet reader runs
+    one schema-inference job), and returns the same rows."""
+    from aim357_2019_etl_and_ml_workshop_spark.sql_surface import engine_sql
+
+    sql = "SELECT lang, count(*) AS n FROM documents GROUP BY lang"
+    tracker = spark.sparkContext.statusTracker()
+    first = sorted(engine_sql(spark, sf_dir, sql).collect())
+    before = set(tracker.getJobIdsForGroup(None))
+    df = engine_sql(spark, sf_dir, sql)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert sorted(df.collect()) == first
+    assert len(first) > 0

@@ -103,3 +103,28 @@ def test_real_local_session_conf_applied(spark):
     assert spark.conf.get(SPLIT_KEY) == str(16 * 1024 * 1024)
     assert spark.conf.get(MINPART_KEY) == str(64 * 1024)
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_codegen_cache_holds_a_warm_plan_working_set(spark):
+    """get_spark sizes the generated-class cache above the plan working
+    set (Spark's default keeps 100 classes). A second sweep over more
+    than 100 distinct code-generated plans must compile nothing: every
+    class comes from the cache. Each integer literal is inlined into the
+    generated Java source, so each projection is a distinct class.
+    Executing the physical plan compiles its whole-stage class on the
+    driver, as every action does first; the RDD is not run, which keeps
+    the sweep to planning and compilation."""
+    from pyspark.sql import functions as F
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    base = spark.range(1)
+
+    def sweep():
+        for i in range(110):
+            df = base.select((F.col("id") * 7 + F.lit(1000 + i)).alias("x"))
+            df._jdf.queryExecution().executedPlan().execute()
+
+    sweep()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    sweep()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
