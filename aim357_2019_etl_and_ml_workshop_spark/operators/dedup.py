@@ -272,13 +272,6 @@ def minhash_lsh_candidates(
     return cand
 
 
-# Join strategy for attaching candidate-doc shingle arrays to the pair
-# table in minhash_near_duplicates' verify phase. "auto" (default) picks
-# per the broadcast budget below; None / "SHUFFLE_HASH" force one
-# strategy (module-level so the perf A/B can toggle it in one JVM; see
-# OPTIMIZATION_r13.md).
-_CORPUS_JOIN_HINT: str | None = "auto"
-
 # doc_arrs bytes per raw parquet corpus byte, worst case: each text byte
 # lands in up to shingle_n shingle strings (~3x) and parquet zstd
 # compresses text ~2-3x — so in-memory candidate-doc shingle arrays run
@@ -308,8 +301,6 @@ def _corpus_join_strategy(df) -> str | None:
     decision is a partitioning/strategy choice only — results are
     identical either way (pinned by the r13 A/B equality checks and the
     full-value oracles of the span queries / portable minhash twin)."""
-    if _CORPUS_JOIN_HINT != "auto":
-        return _CORPUS_JOIN_HINT
     spark = df.sparkSession
     try:
         raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -573,11 +564,12 @@ def _salted_self_pairs(
     When to use: ONLY when hot buckets straggle against idle executors —
     a large cluster with a handful of mega-buckets. On a saturated box it
     never pays, even in its design regime: measured with ONE boilerplate
-    key over the sf1 documents background (tools/measure_skew_split.py,
-    32 cores, chunks=4, checksum-equal answers), m=10^4 dups is plain
-    15.7 s vs salted 19.0 s and m=3x10^4 (4.5x10^8 result pairs) is
-    plain 184 s vs salted 252 s; earlier, moderate skew (sf10, hottest
-    buckets ~10^3 rows) was plain 44 s vs salted 63-87 s. Two reasons:
+    key over the sf1 documents background (PERF.md r5; the harness is
+    removed, see git history; 32 cores, chunks=4, checksum-equal
+    answers), m=10^4 dups is plain 15.7 s vs salted 19.0 s and m=3x10^4
+    (4.5x10^8 result pairs) is plain 184 s vs salted 252 s; earlier,
+    moderate skew (sf10, hottest buckets ~10^3 rows) was plain 44 s vs
+    salted 63-87 s. Two reasons:
     (a) with chunks >= a few hot keys the plain join's hot tasks already
     occupy cores, so splitting buys no parallelism a single box can use;
     (b) plain co-locates both orientations of every hot pair in one task,
@@ -1512,7 +1504,6 @@ def semantic_dedup(
     strategy: str = "joined",
     eager_release: bool = False,
     cell_col: str | None = None,
-    block_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-shaped semantic dedup (Abbas et al. 2023): partition the
     embedding space into cells, compare only WITHIN a cell, and drop any
@@ -1530,13 +1521,13 @@ def semantic_dedup(
     column — the paper's actual fitted cells: join
     ``mlpipeline.cluster_embeddings(df, k=...)`` assignments on and pass
     ``cell_col="cluster"`` (n_sign_dims is then ignored). At corpus
-    scale this is the sizing lever: pick k so |corpus|/k vectors fit one
-    task's memory budget in the tiled kernel.
+    scale this is the sizing lever: pick k so no cell forces the blocked
+    kernel past its memory cap (see below).
 
-    Three strategies, identical verdicts up to round(cos, 6)
+    Two strategies, identical verdicts up to round(cos, 6)
     float-boundary effects (contract-twinned by pytest and by the shared
     semantic_dedup_* oracle SQL on observed data; the joined form's
-    interpreted left-fold dot product, the BLAS kernels' dgemm
+    interpreted left-fold dot product, the BLAS kernel's dgemm
     accumulation order, and Spark's HALF_UP vs numpy's half-to-even
     rounding can in principle flip a verdict whose cosine sits within
     float error of the 6th decimal or exactly on a rounding boundary —
@@ -1552,59 +1543,25 @@ def semantic_dedup(
       zero-norm vectors have undefined cosine and are never dropped
       (guarded on BOTH engines: Spark's 0/0 is NULL while DuckDB's IEEE
       0/0 is NaN, which sorts above every threshold).
-    - ``strategy="tiled"``: the SCALE path (VERDICT r07 #1). One shuffle
-      (hash-partition by cell), then each cell resolves its verdicts in
-      a single Arrow-batched kernel: sort the cell's ids, one dense
-      cache-blocked BLAS matmul per (candidate-block, earlier-block)
-      pair, dropped[j] = any i<j with round(cos,6) >= threshold. No
-      pair rows ever materialize or shuffle — the kernel emits exactly
-      |cell| verdict rows. Zero-norm rows divide to NaN, and NaN >=
-      threshold is False on both the dropper and droppee side, which is
-      precisely the joined form's guard. Compute is sum(|cell|^2)·d
-      flops at BLAS rate (vs interpreted folds), memory per task is
-      |cell|·d·8 bytes + one SB^2 scratch block — at corpus scale size
-      2^n_sign_dims (or swap sign cells for fitted centroids via
-      mlpipeline.cluster_embeddings) so cells stay task-sized; the
-      blocked elementwise pass reuses the cache-resident sub-block
-      discipline of similarity._tiled_matmul_pairs (same SB=1024, same
-      round-then-compare float sequence, so verdicts agree with the
-      joined form up to the float-boundary caveat above).
-    - ``strategy="blocked"``: the SKEW-proof scale path — cells
-      hash-split into ``ceil(|cell|/block_rows)`` blocks, one Arrow
-      task per block PAIR, per-task memory bounded regardless of the
-      largest cell; costs n·B replication through the pair shuffle.
-      Use when one cell can dominate (boilerplate-heavy fitted cells);
-      tiled is faster when cells are balanced. See
+    - ``strategy="blocked"``: the scale path — cells hash-split into
+      blocks sized from the largest measured cell, one Arrow BLAS task
+      per block PAIR, per-task memory bounded regardless of the largest
+      cell; costs n·B replication through the pair shuffle, and warns
+      when the memory cap forces B past _BLOCK_REPL_WARN (the lever is
+      then finer cells via ``cell_col``/larger k). See
       _semantic_dedup_blocked.
 
-    ``block_rows`` (blocked strategy only): the block edge. Default
-    ``None`` DERIVES it from the corpus — one aggregate over the
-    per-cell counts the strategy computes anyway picks the smallest
-    block that keeps replication ceil(max|cell|/block_rows) <=
-    _BLOCK_REPL_TARGET (8), capped at _BLOCK_ROWS_CAP (4096) so the
-    kernel's block_rows^2 float64 similarity matrix stays ~128 MB
-    (VERDICT r08 wrong #1: a fixed default is a sizing footgun — the
-    measured failure is block_rows=4 at sf10 = ~780 replicas of every
-    vector through the pair shuffle). An EXPLICIT block_rows that
-    forces replication past _BLOCK_REPL_WARN (64) raises a loud
-    UserWarning naming the derived fix; the derived path warns too
-    when the memory cap itself forces B > 64 (a cell over ~256k
-    vectors — at that point the right lever is finer cells via
-    ``cell_col``/larger k, not bigger blocks). block_rows never
-    affects the verdicts, only the plan.
-
-    ``eager_release=True`` (joined + blocked forms — tiled persists
-    nothing): materialize the verdict frame via localCheckpoint and
-    unpersist the corpus-scale base cache before returning, per the
-    module convention (minhash_near_duplicates) — repeated calls in a
-    long-lived session otherwise accumulate cached corpus projections
-    until LRU eviction (VERDICT r07 wrong #2 / ADVICE r07)."""
+    ``eager_release=True``: materialize the verdict frame via
+    localCheckpoint and unpersist the corpus-scale base cache before
+    returning, per the module convention (minhash_near_duplicates) —
+    repeated calls in a long-lived session otherwise accumulate cached
+    corpus projections until LRU eviction (VERDICT r07 wrong #2 /
+    ADVICE r07)."""
     from .similarity import as_double_vec, dot, norm
 
-    if strategy not in ("joined", "tiled", "blocked"):
+    if strategy not in ("joined", "blocked"):
         raise ValueError(
-            "strategy must be 'joined', 'tiled' or 'blocked', "
-            f"got {strategy!r}"
+            f"strategy must be 'joined' or 'blocked', got {strategy!r}"
         )
     v = as_double_vec(vec_col)
     if cell_col is not None:
@@ -1614,12 +1571,9 @@ def semantic_dedup(
         for i in range(n_sign_dims):
             cell = cell + F.when(F.element_at(v, i + 1) > 0, 2**i).otherwise(0)
 
-    if strategy == "tiled":
-        return _semantic_dedup_tiled(df, id_col, v, cell, threshold)
     if strategy == "blocked":
         return _semantic_dedup_blocked(
-            df, id_col, v, cell, threshold, block_rows,
-            eager_release=eager_release,
+            df, id_col, v, cell, threshold, eager_release=eager_release
         )
 
     # base feeds THREE consumers in one action (both self-join sides +
@@ -1665,112 +1619,6 @@ def semantic_dedup(
     return out
 
 
-def _semantic_dedup_tiled(
-    df: DataFrame,
-    id_col: str,
-    v: Column,
-    cell: Column,
-    threshold: float,
-) -> DataFrame:
-    """Per-cell dense-compare kernel behind semantic_dedup(strategy=
-    'tiled'). groupBy(cell).applyInPandas: each task receives ONE cell's
-    (id, vector) rows and emits that cell's |cell| verdict rows directly
-    — no pair table exists at any point. See semantic_dedup's docstring
-    for the contract; kernel discipline (preallocated SB^2 scratch,
-    divide/round/compare kept cache-resident, NaN-for-zero-norm) follows
-    similarity._tiled_matmul_pairs."""
-    import numpy as np
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, cell bigint, kept boolean"
-    th = float(threshold)
-    SB = 1024  # sub-block edge — 8 MB float64 scratch, cache-resident
-
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        # A NULL cell (possible only via a null cell_col value) never
-        # equi-joins in the joined form — its rows compare with nothing
-        # and keep themselves. groupBy would bucket them TOGETHER here,
-        # so short-circuit the group to kept=true for exact parity.
-        if len(pdf) and pd.isna(pdf["cell"].iloc[0]):
-            return pd.DataFrame(
-                {id_col: pdf[id_col], "cell": pdf["cell"], "kept": True}
-            )
-        # NULL vectors mirror the joined form exactly: their norm is NULL
-        # there, so they never drop and are never dropped (kept=true) —
-        # peel them off before the dense stack (np can't stack None).
-        nulls = pdf[pdf["_v"].isna()]
-        pdf = pdf[pdf["_v"].notna()]
-        m = len(pdf)
-        if m == 0:
-            return pd.DataFrame(
-                {
-                    id_col: nulls[id_col],
-                    "cell": nulls["cell"],
-                    "kept": True,
-                }
-            )
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids, kind="stable")  # ids are unique keys
-        ids = ids[order]
-        mat = np.stack(
-            [np.asarray(r, dtype=np.float64) for r in pdf["_v"].to_numpy()]
-        )[order]
-        norms = np.linalg.norm(mat, axis=1)
-        dropped = np.zeros(m, dtype=bool)
-        sbuf = np.empty((SB, SB))
-        sobuf = np.empty((SB, SB))
-        tril = None
-        # dropped[j] = any i < j with round(cos(i,j), 6) >= th. Earlier
-        # rows i run along the SECOND operand so the reduction is a
-        # column-wise any(); zero-norm rows produce 0/0 = NaN cosines,
-        # and NaN >= th is False — never a dropper, never dropped.
-        with np.errstate(invalid="ignore", divide="ignore"):
-            for p0 in range(0, m, SB):  # candidate (droppee) block j
-                p1 = min(p0 + SB, m)
-                for q0 in range(0, p0 + SB, SB):  # earlier (dropper) i
-                    q1 = min(q0 + SB, m)
-                    full = (p1 - p0 == SB) and (q1 - q0 == SB)
-                    if full:
-                        s = np.matmul(mat[q0:q1], mat[p0:p1].T, out=sbuf)
-                        o = np.outer(norms[q0:q1], norms[p0:p1], out=sobuf)
-                    else:
-                        s = mat[q0:q1] @ mat[p0:p1].T
-                        o = np.outer(norms[q0:q1], norms[p0:p1])
-                    np.divide(s, o, out=s)
-                    hit = np.round(s, 6, out=s) >= th
-                    if q0 == p0:  # diagonal block: strict i < j only
-                        if tril is None or hit.shape != tril.shape:
-                            tril = np.tril(
-                                np.ones(hit.shape, dtype=bool), k=0
-                            )
-                        hit &= ~tril[: hit.shape[0], : hit.shape[1]]
-                    dropped[p0:p1] |= hit.any(axis=0)
-        out = pd.DataFrame(
-            {id_col: ids, "cell": pdf["cell"].iloc[0], "kept": ~dropped}
-        )
-        if len(nulls):
-            out = pd.concat(
-                [
-                    out,
-                    pd.DataFrame(
-                        {
-                            id_col: nulls[id_col].to_numpy(),
-                            "cell": nulls["cell"].to_numpy(),
-                            "kept": True,
-                        }
-                    ),
-                ],
-                ignore_index=True,
-            )
-        return out
-
-    base = df.select(
-        F.col(id_col), v.alias("_v"), cell.cast("bigint").alias("cell")
-    )
-    return base.groupBy("cell").applyInPandas(kern, schema)
-
-
 # Blocked-strategy sizing bounds (semantic_dedup docstring, VERDICT r08
 # wrong #1). REPL_TARGET bounds the pair-shuffle replication factor B =
 # ceil(max|cell|/block_rows); ROWS_CAP bounds per-task memory (the kernel
@@ -1786,12 +1634,13 @@ _BLOCK_REPL_WARN = 64
 def derive_semantic_block_rows(max_cell: int) -> int:
     """Pick blocked-strategy block_rows from the largest cell's row count:
     the smallest block that keeps replication <= _BLOCK_REPL_TARGET,
-    clamped to [_BLOCK_ROWS_FLOOR, _BLOCK_ROWS_CAP]. Pure function so the
-    sizing policy is unit-testable without a corpus."""
+    clamped to [_BLOCK_ROWS_FLOOR, _BLOCK_ROWS_CAP] (the memory cap wins).
+    Pure function so the sizing policy is unit-testable without a
+    corpus."""
     if max_cell is None or max_cell <= 0:
         return _BLOCK_ROWS_CAP
     want = math.ceil(max_cell / _BLOCK_REPL_TARGET)
-    return max(_BLOCK_ROWS_FLOOR, min(_BLOCK_ROWS_CAP, want))
+    return min(_BLOCK_ROWS_CAP, max(_BLOCK_ROWS_FLOOR, want))
 
 
 def _semantic_dedup_blocked(
@@ -1800,25 +1649,23 @@ def _semantic_dedup_blocked(
     v: Column,
     cell: Column,
     threshold: float,
-    block_rows: int | None = None,
     eager_release: bool = False,
 ) -> DataFrame:
     """Skew-proof semantic_dedup(strategy='blocked'): identical verdicts
-    to joined/tiled, but a CELL is no longer a unit of work — each cell
-    hash-splits into ceil(|cell|/block_rows) blocks, every block PAIR
-    (i <= j) is one Arrow task, and per-task memory is bounded by
+    to the joined form, but a CELL is no longer a unit of work — each
+    cell hash-splits into ceil(|cell|/block_rows) blocks, every block
+    PAIR (i <= j) is one Arrow task, and per-task memory is bounded by
     ~2·block_rows vectors + one block_rows² similarity matrix no matter
-    how large the largest cell grows (the tiled kernel's one-task-per-
-    cell shape is faster when cells are balanced — measured 1.5×
-    max/avg sign-cell skew on testdata — but a boilerplate-dominated
-    fitted cell at corpus scale would serialize it). Cost: each vector
-    is replicated to its block's ceil(|cell|/block_rows) block pairs,
-    so bytes shuffled are n·B — block_rows=None (default) derives the
-    size from the corpus's largest cell so B <= _BLOCK_REPL_TARGET
+    how large the largest cell grows (a boilerplate-dominated fitted
+    cell at corpus scale would serialize a one-task-per-cell kernel).
+    Cost: each vector is replicated to its block's ceil(|cell|/
+    block_rows) block pairs, so bytes shuffled are n·B. block_rows is
+    derived from the corpus's largest cell so B <= _BLOCK_REPL_TARGET
     under the _BLOCK_ROWS_CAP memory ceiling (derive_semantic_block_
-    rows), and any sizing that forces B past _BLOCK_REPL_WARN warns
-    loudly (the replication is the standard distributed all-pairs
-    trade; unbounded B is the VERDICT r08 footgun).
+    rows; a fixed size is the VERDICT r08 footgun — block_rows=4 at sf10
+    measured ~780 replicas of every vector), and a cell so large that
+    the cap forces B past _BLOCK_REPL_WARN warns loudly. The block size
+    never affects the verdicts, only the plan.
     Blocks are hash-assigned (xxhash64(id) mod B), so each kernel
     compares ids directly: a row is dropped iff ANY same-cell row with
     a smaller id clears the threshold, exactly the joined form's
@@ -1845,26 +1692,19 @@ def _semantic_dedup_blocked(
     counts = vec.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
     # Corpus-aware block sizing (VERDICT r08 wrong #1): one tiny aggregate
     # over the per-cell counts (computed on the persisted base, so the
-    # extra action rescans nothing) derives block_rows when the caller
-    # didn't pass one, and audits the replication factor when they did.
+    # extra action rescans nothing) derives block_rows.
     row = counts.agg(F.max("_n").alias("mx")).first()
     max_cell = int(row["mx"]) if row and row["mx"] is not None else 0
-    if block_rows is None:
-        block_rows = derive_semantic_block_rows(max_cell)
+    block_rows = derive_semantic_block_rows(max_cell)
     repl = math.ceil(max_cell / block_rows) if max_cell else 1
     if repl > _BLOCK_REPL_WARN:
         warnings.warn(
             f"semantic_dedup(strategy='blocked'): largest cell has "
             f"{max_cell} rows and block_rows={block_rows} replicates each "
             f"of its vectors ~{repl}x through the pair shuffle "
-            f"(bound: {_BLOCK_REPL_WARN}). "
-            + (
-                "The memory cap forces this block size — split the corpus "
-                "into finer cells instead (cell_col= with a larger k)."
-                if block_rows >= _BLOCK_ROWS_CAP
-                else f"Pass block_rows=None to derive "
-                f"{derive_semantic_block_rows(max_cell)} from the corpus."
-            ),
+            f"(bound: {_BLOCK_REPL_WARN}). The memory cap forces this "
+            "block size — split the corpus into finer cells instead "
+            "(cell_col= with a larger k).",
             UserWarning,
             stacklevel=3,
         )

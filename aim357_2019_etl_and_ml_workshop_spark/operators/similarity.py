@@ -58,13 +58,14 @@ def _gather_broadcast(spark, gather: tuple):
     unrelated jobs, but an ABANDONED one is expensive — its Python
     ``Broadcast`` object lingers until cyclic GC, and the py4j finalizer
     round-trips plus JVM-side ContextCleaner removal land in the middle of
-    whatever runs next. Measured (r6 autopsy, tools/ab_* harnesses at
-    sf0.1): two leaked per-bench-run lsh gathers inflated the FOLLOWING
-    query (ivf_ann_topk) from ~1.2 s to ~3 s with a multi-run decay as GC
-    drained them, while 8 alive referenced broadcasts had zero effect
-    (1.24/1.15/1.12 s at 0/2/8). Reusing one broadcast per distinct matrix
-    is also the right 100 TB shape — the gather is model/index state,
-    shipped once per executor, not once per invocation.
+    whatever runs next. Measured (r6 autopsy in PERF.md, sf0.1; its A/B
+    harnesses are removed, see git history): two leaked per-bench-run
+    lsh gathers inflated the FOLLOWING query (ivf_ann_topk) from ~1.2 s
+    to ~3 s with a multi-run decay as GC drained them, while 8 alive
+    referenced broadcasts had zero effect (1.24/1.15/1.12 s at 0/2/8).
+    Reusing one broadcast per distinct matrix is also the right 100 TB
+    shape — the gather is model/index state, shipped once per executor,
+    not once per invocation.
 
     Fingerprint is blake2b over the raw id+matrix bytes (~1 GB/s — cheap
     next to the collect that built the triple; 100 MB at the sf10 scale

@@ -804,13 +804,14 @@ def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate in decimal(38,0), matching the oracle's decimal sum
     bit-for-bit).
 
-    Plan closure (PERF.md r7, tools/ab_revenue.py): the zero-wide-exchange
-    broadcast-map alternative ties at sf0.1 (the per-job floor dominates)
-    and loses 1.75x at sf10 (15M-entry broadcast map build+probe beats no
-    shuffle) — and is impossible at 100 TB where orders is not
-    broadcastable. This shape is final; the residual sf0.1 gap vs DuckDB
-    is scan/stage fixed cost (bare scan+agg alone is 5x the full DuckDB
-    query), bounded in PERF.md."""
+    Plan closure (PERF.md r7; the A/B harness is removed, see git
+    history): the zero-wide-exchange broadcast-map alternative ties at
+    sf0.1 (the per-job floor dominates) and loses 1.75x at sf10
+    (15M-entry broadcast map build+probe beats no shuffle) — and is
+    impossible at 100 TB where orders is not broadcastable. This shape
+    is final; the residual sf0.1 gap vs DuckDB is scan/stage fixed cost
+    (bare scan+agg alone is 5x the full DuckDB query), bounded in
+    PERF.md."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -3230,9 +3231,9 @@ def neardup_clusters_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     conformance SFs, and the pair source carries its own driver-checked
     contract (minhash_recall_check).
 
-    Growth model (VERDICT r09 next #4, measured by
-    tools/measure_neardup_growth.py): the ~18x sf1->sf10 soak growth is
-    PAIR-MASS, not iteration count — verified pairs grew 89.6x for 10x
+    Growth model (VERDICT r09 next #4, measured in PERF.md r10; the
+    harness is removed, see git history): the ~18x sf1->sf10 soak growth
+    is PAIR-MASS, not iteration count — verified pairs grew 89.6x for 10x
     docs (pairs/doc 0.041 -> 0.368; avg graph degree 1.25 -> 3.09, max
     6 -> 47) because the synthetic corpus draws near-dup docs from a
     fixed template pool, so group size g scales with the corpus and a
@@ -6543,7 +6544,7 @@ def substring_dedup_rewrite_query(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # Shared by semantic_dedup_cells (joined conformance form) and
-# semantic_dedup_tiled (scale form): the two strategies are contract twins
+# semantic_dedup_blocked (scale form): the two strategies are contract twins
 # — identical (vec_id, cell, kept) verdicts — so they share ONE oracle.
 # The 6 sign dims and the 0.35 threshold are pinned HERE and passed
 # explicitly at both call sites (ADVICE r07: relying on the operator
@@ -6582,30 +6583,13 @@ def semantic_dedup_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives every sign-cell assignment, every within-cell cosine, and
     every keep-min-id verdict (operators/dedup.semantic_dedup). This is
     the JOINED conformance form — quadratic per cell BY CONTRACT (it is
-    what the oracle recomputes); semantic_dedup_tiled is the scale form
+    what the oracle recomputes); semantic_dedup_blocked is the scale form
     with identical verdicts."""
     from .operators.dedup import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
     return semantic_dedup(
         emb, "vec_id", "embedding", threshold=0.35, n_sign_dims=6
-    )
-
-
-@register("semantic_dedup_tiled", _SEMANTIC_DEDUP_ORACLE)
-def semantic_dedup_tiled_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALE form of SemDeDup semantic dedup (VERDICT r07 #1): same
-    cell-constrained keep-min-id semantics, same full value oracle as
-    semantic_dedup_cells, but resolved per cell by one Arrow-batched
-    cache-blocked BLAS kernel (operators/dedup._semantic_dedup_tiled) —
-    no pair table, no interpreted cosine folds, one shuffle. Passing the
-    SAME oracle makes the two strategies hash-verified contract twins."""
-    from .operators.dedup import semantic_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.35, n_sign_dims=6,
-        strategy="tiled",
     )
 
 
@@ -6657,24 +6641,17 @@ def dsir_importance_weights_query(spark: SparkSession, sf_dir: str) -> DataFrame
 def semantic_dedup_blocked_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SKEW-proof scale form of SemDeDup semantic dedup: same
     cell-constrained keep-min-id semantics and the SAME full oracle as
-    semantic_dedup_cells / semantic_dedup_tiled, but a cell hash-splits
-    into bounded blocks and every block pair is its own Arrow task —
-    per-task memory is independent of the largest cell
-    (operators/dedup._semantic_dedup_blocked). block_rows derives from
-    a footer count so cells split into ~4 blocks at EVERY SF: the
-    conformance run exercises multi-block cells and both kernel
-    branches, while the soak SFs keep the replication factor constant
-    instead of inheriting a fixed tiny block size (block_rows=4 at sf10
-    means ~780 copies of every vector — measured stuck; block size must
-    scale with the corpus, exactly as the operator docstring says).
-    block_rows does not affect the result, only the plan."""
+    semantic_dedup_cells, but a cell hash-splits into blocks sized from
+    the largest measured cell and every block pair is its own Arrow BLAS
+    task — per-task memory is independent of the largest cell
+    (operators/dedup._semantic_dedup_blocked). Passing the SAME oracle
+    makes the two strategies hash-verified contract twins."""
     from .operators.dedup import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
-    block_rows = max(4, emb.count() // 256)
     return semantic_dedup(
         emb, "vec_id", "embedding", threshold=0.35, n_sign_dims=6,
-        strategy="blocked", block_rows=block_rows,
+        strategy="blocked",
     )
 
 
@@ -7446,7 +7423,7 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_verdicts,
            TRUE AS cells_le_k,
            CAST(0 AS BIGINT) AS n_mismatched,
-           TRUE AS tiled_eq_joined
+           TRUE AS blocked_eq_joined
     FROM embeddings
     """,
 )
@@ -7463,13 +7440,12 @@ def semantic_dedup_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL-checkable invariants — every vector gets exactly one verdict
     (n_points == n_verdicts == count(*), hash-checked hard) — while the
     fitted-cell verdicts themselves are cross-proven INSIDE the query:
-    the tiled BLAS kernel and the declarative joined form consume the
+    the blocked BLAS kernel and the declarative joined form consume the
     SAME assignment frame and must agree row-for-row (n_mismatched,
     hash-checked at 0; a kernel/fold divergence on fitted cells flips
-    tiled_eq_joined and fails the hash). cells_le_k pins the assignment
+    blocked_eq_joined and fails the hash). cells_le_k pins the assignment
     range. Quadratic by contract on the joined side — soak-excluded with
-    the kernel twins (semantic_dedup_tiled / semantic_dedup_blocked) like
-    semantic_dedup_cells."""
+    the kernel twin (semantic_dedup_blocked) like semantic_dedup_cells."""
     from .operators.dedup import semantic_dedup
     from .operators.mlpipeline import cluster_embeddings
 
@@ -7479,41 +7455,42 @@ def semantic_dedup_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one assignment frame feeds BOTH strategies (persist: the k-means
     # transform + join otherwise re-executes per consuming action)
     with_cells = emb.join(cells, "vec_id").persist()
-    tiled = semantic_dedup(
-        with_cells, "vec_id", "embedding", threshold=0.35,
-        cell_col="cluster", strategy="tiled",
-    ).persist()
     joined = semantic_dedup(
         with_cells, "vec_id", "embedding", threshold=0.35,
         cell_col="cluster",
     )
     try:
-        t = tiled.select(
-            "vec_id", F.col("cell").alias("c_t"), F.col("kept").alias("k_t")
+        # eager_release: materialize the verdicts once for the three
+        # actions below and drop the kernel's own corpus cache
+        blocked = semantic_dedup(
+            with_cells, "vec_id", "embedding", threshold=0.35,
+            cell_col="cluster", strategy="blocked", eager_release=True,
+        )
+        b = blocked.select(
+            "vec_id", F.col("cell").alias("c_b"), F.col("kept").alias("k_b")
         )
         j = joined.select(
             "vec_id", F.col("cell").alias("c_j"), F.col("kept").alias("k_j")
         )
         mism = (
-            t.join(j, "vec_id", "full")
+            b.join(j, "vec_id", "full")
             .where(
                 ~(
-                    F.col("c_t").eqNullSafe(F.col("c_j"))
-                    & F.col("k_t").eqNullSafe(F.col("k_j"))
+                    F.col("c_b").eqNullSafe(F.col("c_j"))
+                    & F.col("k_b").eqNullSafe(F.col("k_j"))
                 )
             )
             .count()
         )
         n_points = emb.count()
-        n_verdicts = tiled.count()
-        n_cells = tiled.select("cell").distinct().count()
+        n_verdicts = blocked.count()
+        n_cells = blocked.select("cell").distinct().count()
     finally:
-        tiled.unpersist(blocking=False)
         with_cells.unpersist(blocking=False)
     return local_df(spark, 
         [(n_points, n_verdicts, n_cells <= 8, mism, mism == 0)],
         "n_points bigint, n_verdicts bigint, cells_le_k boolean, "
-        "n_mismatched bigint, tiled_eq_joined boolean",
+        "n_mismatched bigint, blocked_eq_joined boolean",
     )
 
 
@@ -7613,8 +7590,8 @@ def bloom_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k salted rehashes -> bucket -> map-side bit_or; the shuffle is capped
     at m_bits/64 rows, and the dense bitmap is assembled JVM-side in one
     ordered-array row — the Python driver never touches the bits; in
-    production m_bits is corpus-aware, tools/measure_bloom.py has the
-    sf1/sf10 A/B). Corpus grams probe the
+    production m_bits is corpus-aware, PERF.md r9 has the sf1/sf10 A/B;
+    its harness is removed, see git history). Corpus grams probe the
     broadcast bitmap hash-first inside the scan stage — no gram string is
     built for non-candidates — and only Bloom survivors reach the verify
     equi-join, where string equality kills false positives and 64-bit

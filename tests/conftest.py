@@ -23,7 +23,7 @@ SLOW_TESTS = {
     "test_incremental_dedup_equals_selfjoin_over_union",
     "test_simhash_skew_split_preserves_the_answer",
     "test_connected_components_both_paths_match_bfs",
-    "test_semantic_dedup_tiled_equals_joined",
+    "test_semantic_dedup_blocked_equals_joined",
     "test_minhash_portable_matches_reference_and_xxhash_verdicts",
     "test_hash_spans_mode_equals_string_mode",
     "test_dsir_weights_invariant_to_partitioning",

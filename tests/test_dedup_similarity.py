@@ -1261,8 +1261,9 @@ def test_skew_split_boilerplate_regime_pair_set_equal(spark):
     single hot bucket whose C(m, 2) pair emission the plain join serializes
     onto one task. Salting must return the IDENTICAL pair set — ids and
     hamming values, not just counts. m=120 keeps the C(m,2)=7140-pair
-    answer collectable; tools/measure_skew_split.py runs the same shape at
-    m=10^4 over sf1 for the wall-clock crossover recorded in PERF.md."""
+    answer collectable; PERF.md r5 records the same shape at m=10^4 over
+    sf1 for the wall-clock crossover (its harness is removed, see git
+    history)."""
     boiler = (
         "subscribe to our newsletter terms of service privacy policy all "
         "rights reserved copyright contact us about careers press blog"
@@ -1401,13 +1402,13 @@ def test_semantic_dedup_edges(spark):
     assert out1[2] == 1 and out1[4] == 0
 
 
-def test_semantic_dedup_tiled_real_embeddings_and_string_ids(spark, sf_dir):
-    """The tiled strategy is a contract twin of the joined form (VERDICT
-    r07 #1): identical verdicts on the real embeddings table, and on a
-    string-id frame with NULL vectors — the id type must survive the
-    Arrow round-trip (kernel schema derives it from the input), NULL
-    vectors must get kept=true on both paths, and an unknown strategy
-    must fail fast."""
+def test_semantic_dedup_blocked_real_embeddings_and_string_ids(spark, sf_dir):
+    """The blocked strategy is a contract twin of the joined form
+    (VERDICT r07 #1): identical verdicts on the real embeddings table,
+    and on a string-id frame with NULL and zero-norm vectors — the id
+    type must survive the Arrow round-trip (kernel schema derives it
+    from the input), NULL and zero-norm vectors must get kept=true on
+    both paths, and an unknown or removed strategy must fail fast."""
     import pytest
     from pyspark.sql import Row
 
@@ -1422,13 +1423,13 @@ def test_semantic_dedup_tiled_real_embeddings_and_string_ids(spark, sf_dir):
         tuple(r)
         for r in semantic_dedup(emb, "vec_id", "embedding", **kw).collect()
     )
-    tiled = sorted(
+    blocked = sorted(
         tuple(r)
         for r in semantic_dedup(
-            emb, "vec_id", "embedding", strategy="tiled", **kw
+            emb, "vec_id", "embedding", strategy="blocked", **kw
         ).collect()
     )
-    assert tiled == joined and len(tiled) == emb.count()
+    assert blocked == joined and len(blocked) == emb.count()
 
     rows = [
         Row(vec_id="d1", embedding=[1.0, 0.0]),
@@ -1437,7 +1438,7 @@ def test_semantic_dedup_tiled_real_embeddings_and_string_ids(spark, sf_dir):
         Row(vec_id="d4", embedding=[0.0, 0.0]),
     ]
     sdf = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    for strategy in ("joined", "tiled"):
+    for strategy in ("joined", "blocked"):
         out = semantic_dedup(
             sdf, "vec_id", "embedding", threshold=0.9, n_sign_dims=0,
             strategy=strategy,
@@ -1446,13 +1447,14 @@ def test_semantic_dedup_tiled_real_embeddings_and_string_ids(spark, sf_dir):
         got = {r["vec_id"]: r["kept"] for r in out.collect()}
         assert got == {"d1": True, "d2": False, "d3": True, "d4": True}, strategy
 
-    with pytest.raises(ValueError, match="strategy"):
-        semantic_dedup(sdf, "vec_id", "embedding", strategy="nope")
+    for strategy in ("nope", "tiled"):
+        with pytest.raises(ValueError, match="strategy"):
+            semantic_dedup(sdf, "vec_id", "embedding", strategy=strategy)
 
 
 def test_semantic_dedup_eager_release_frees_corpus_cache(spark):
     """VERDICT r07 wrong #2 / ADVICE r07: eager_release=True must leave no
-    corpus-scale cached frame behind. The joined form persists a corpus
+    corpus-scale cached frame behind. Both strategies persist a corpus
     projection carrying the full vectors (~n*dim*8 bytes); with
     eager_release the only surviving persistent RDD is the narrow verdict
     localCheckpoint — delta-counted against the session's pre-existing
@@ -1465,7 +1467,10 @@ def test_semantic_dedup_eager_release_frees_corpus_cache(spark):
     )
 
     rng = np.random.default_rng(7)
-    n, dim = 4000, 128  # vector cache ~4 MB; verdict checkpoint ~100 KB
+    # vector cache ~4 MB; verdict checkpoint ~25 KB. Few rows, wide
+    # vectors and 8 sign cells: the joined form's interpreted fold costs
+    # per same-cell PAIR
+    n, dim = 1000, 512
     df = spark.createDataFrame(
         [
             Row(vec_id=i, embedding=[float(x) for x in rng.normal(size=dim)])
@@ -1483,33 +1488,40 @@ def test_semantic_dedup_eager_release_frees_corpus_cache(spark):
             i.memSize() + i.diskSize() for i in infos if i.id() in ids
         )
 
-    before = persistent_ids()
-    out = semantic_dedup(
-        df, "vec_id", "embedding", threshold=0.99, n_sign_dims=2,
-        eager_release=True,
-    )
-    assert out.count() == n  # already materialized by the checkpoint
-    new = persistent_ids() - before
-    # exactly the verdict checkpoint — the corpus vector cache is gone
-    assert len(new) == 1, new
-    assert cached_bytes(new) < 1 << 20, "corpus-scale frame still cached"
+    for strategy in ("joined", "blocked"):
+        before = persistent_ids()
+        out = semantic_dedup(
+            df, "vec_id", "embedding", threshold=0.99, n_sign_dims=3,
+            strategy=strategy, eager_release=True,
+        )
+        assert out.count() == n  # already materialized by the checkpoint
+        new = persistent_ids() - before
+        # exactly the verdict checkpoint — the corpus vector cache is gone
+        assert len(new) == 1, (strategy, new)
+        assert cached_bytes(new) < 1 << 20, (
+            f"{strategy}: corpus-scale frame still cached"
+        )
 
 
-def test_semantic_dedup_tiled_crosses_subblock_boundaries(spark):
-    """The tiled kernel's cache-blocked loops (SB=1024) only exercise
-    their diagonal/off-diagonal masking when a CELL exceeds the sub-block
-    edge — pin a 2500-row single-cell corpus (three p-blocks, ragged
-    tail) against a direct numpy re-derivation of the contract:
+def test_semantic_dedup_blocked_crosses_block_boundaries(spark):
+    """The blocked kernel's cross-block branch only runs when a CELL
+    splits into several blocks — pin a 2500-row single-cell corpus
+    (derived sizing: 313-row blocks, so 8 blocks and 36 block pairs)
+    against a direct numpy re-derivation of the contract:
     dropped[j] = any i<j with round(cos, 6) >= threshold."""
+    import math
+
     import numpy as np
     from pyspark.sql import Row
 
     from aim357_2019_etl_and_ml_workshop_spark.operators.dedup import (
+        derive_semantic_block_rows,
         semantic_dedup,
     )
 
     rng = np.random.default_rng(42)
     n, dim, th = 2500, 8, 0.9
+    assert math.ceil(n / derive_semantic_block_rows(n)) == 8  # multi-block
     # low-dim vectors with repeats: plenty of >=0.9 cosines, plus a few
     # zero vectors to pin the NaN guard across block boundaries
     mat = rng.integers(-2, 3, size=(n, dim)).astype(np.float64)
@@ -1530,7 +1542,7 @@ def test_semantic_dedup_tiled_crosses_subblock_boundaries(spark):
         r["vec_id"]: r["kept"]
         for r in semantic_dedup(
             df, "vec_id", "embedding", threshold=th, n_sign_dims=0,
-            strategy="tiled",
+            strategy="blocked",
         ).collect()
     }
     n_dropped = sum(1 for k in expected.values() if not k)
@@ -1541,7 +1553,7 @@ def test_semantic_dedup_tiled_crosses_subblock_boundaries(spark):
 def test_semantic_dedup_fitted_cells_via_cell_col(spark, sf_dir):
     """cell_col= swaps sign cells for PRECOMPUTED cells (the SemDeDup
     paper's fitted k-means cells via mlpipeline.cluster_embeddings):
-    joined and tiled strategies must agree verdict-for-verdict on the
+    joined and blocked strategies must agree verdict-for-verdict on the
     real embeddings, the emitted cell must be the provided assignment,
     and a NULL cell must keep its rows on both paths (it never
     equi-joins in the joined form)."""
@@ -1565,14 +1577,14 @@ def test_semantic_dedup_fitted_cells_via_cell_col(spark, sf_dir):
             with_cells, "vec_id", "embedding", **kw
         ).collect()
     )
-    tiled = sorted(
+    blocked = sorted(
         tuple(r)
         for r in semantic_dedup(
-            with_cells, "vec_id", "embedding", strategy="tiled", **kw
+            with_cells, "vec_id", "embedding", strategy="blocked", **kw
         ).collect()
     )
-    assert tiled == joined
-    assert {c for _, c, _ in tiled} <= set(range(4))  # emitted = provided
+    assert blocked == joined
+    assert {c for _, c, _ in blocked} <= set(range(4))  # emitted = provided
     # same corpus under sign cells differs from fitted cells somewhere
     # (sanity that cell_col actually changed the contract's geometry)
     sign = sorted(
@@ -1581,7 +1593,7 @@ def test_semantic_dedup_fitted_cells_via_cell_col(spark, sf_dir):
             emb, "vec_id", "embedding", threshold=0.35, n_sign_dims=6
         ).collect()
     )
-    assert sign != tiled
+    assert sign != blocked
 
     rows = [
         Row(vec_id=1, embedding=[1.0, 0.0], grp=None),
@@ -1592,7 +1604,7 @@ def test_semantic_dedup_fitted_cells_via_cell_col(spark, sf_dir):
     df = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>, grp bigint"
     )
-    for strategy in ("joined", "tiled"):
+    for strategy in ("joined", "blocked"):
         got = {
             r["vec_id"]: r["kept"]
             for r in semantic_dedup(

@@ -51,31 +51,44 @@ def test_corpus_join_strategy_shuffles_when_budget_too_small(spark, sf_dir):
         spark.conf.set(key, prev)
 
 
-def test_minhash_results_identical_under_both_strategies(spark):
-    docs = _docs(spark)
-    prev = dedup._CORPUS_JOIN_HINT
+def test_minhash_results_identical_under_both_strategies(
+    spark, tmp_path, monkeypatch
+):
+    """Steer the guard through the session's broadcast budget on a
+    file-backed corpus (an in-memory frame always gets SHUFFLE_HASH):
+    the default 64 MB budget broadcasts, -1 shuffles. The verified pairs
+    must be identical, and the guard must really have picked each side."""
+    _docs(spark).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    picked = []
+    guard = dedup._corpus_join_strategy
+
+    def recording_guard(df):
+        picked.append(guard(df))
+        return picked[-1]
+
+    monkeypatch.setattr(dedup, "_corpus_join_strategy", recording_guard)
+
+    def pairs():
+        return sorted(
+            map(
+                tuple,
+                dedup.minhash_near_duplicates(docs, "text", "doc_id")
+                .select("id_a", "id_b", F.col("jaccard"))
+                .collect(),
+            )
+        )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
     try:
-        dedup._CORPUS_JOIN_HINT = None  # broadcast path
-        bcast = sorted(
-            map(
-                tuple,
-                dedup.minhash_near_duplicates(docs, "text", "doc_id")
-                .select("id_a", "id_b", F.col("jaccard"))
-                .collect(),
-            )
-        )
+        bcast = pairs()
         spark.catalog.clearCache()
-        dedup._CORPUS_JOIN_HINT = "SHUFFLE_HASH"
-        shj = sorted(
-            map(
-                tuple,
-                dedup.minhash_near_duplicates(docs, "text", "doc_id")
-                .select("id_a", "id_b", F.col("jaccard"))
-                .collect(),
-            )
-        )
+        spark.conf.set(key, "-1")
+        shj = pairs()
     finally:
-        dedup._CORPUS_JOIN_HINT = prev
+        spark.conf.set(key, prev)
         spark.catalog.clearCache()
+    assert picked == [None, "SHUFFLE_HASH"]
     assert bcast == shj
     assert (1, 4, 1.0) in [(a, b, round(j, 6)) for a, b, j in bcast]

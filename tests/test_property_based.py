@@ -597,14 +597,16 @@ def test_hash_spans_mode_equals_string_mode(spark, data):
 
 @settings(**SETTINGS)
 @given(data=st.data())
-def test_semantic_dedup_tiled_equals_joined(spark, data):
-    """Property (VERDICT r07 #1): semantic_dedup(strategy='tiled') — the
-    per-cell dense BLAS kernel — produces the IDENTICAL (id, cell, kept)
-    verdicts as the declarative joined form on random vector sets,
+def test_semantic_dedup_blocked_equals_joined(spark, data):
+    """Property (VERDICT r07 #1): semantic_dedup(strategy='blocked') — the
+    block-pair dense BLAS kernel — produces the IDENTICAL (id, cell,
+    kept) verdicts as the declarative joined form on random vector sets,
     including duplicate vectors (keep-min-id), zero-norm rows (never
     dropped), and every cell geometry the sign split produces."""
+    import pytest
     from pyspark.sql import Row
 
+    from aim357_2019_etl_and_ml_workshop_spark.operators import dedup
     from aim357_2019_etl_and_ml_workshop_spark.operators.dedup import (
         semantic_dedup,
     )
@@ -635,21 +637,17 @@ def test_semantic_dedup_tiled_equals_joined(spark, data):
         tuple(r)
         for r in semantic_dedup(df, "vec_id", "embedding", **kw).collect()
     )
-    tiled = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            df, "vec_id", "embedding", strategy="tiled", **kw
-        ).collect()
-    )
-    assert tiled == joined
-    # blocked with tiny blocks forces multi-block cells and both kernel
-    # branches (diagonal + cross-block) on every generated corpus
-    blocked = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            df, "vec_id", "embedding", strategy="blocked", block_rows=3, **kw
-        ).collect()
-    )
+    # a floor of 1 lets the derived size go tiny (ceil(max|cell|/8)), which
+    # splits the largest cell (if it has 2+ rows) into several blocks and
+    # so runs both kernel branches (diagonal + cross-block)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_BLOCK_ROWS_FLOOR", 1)
+        blocked = sorted(
+            tuple(r)
+            for r in semantic_dedup(
+                df, "vec_id", "embedding", strategy="blocked", **kw
+            ).collect()
+        )
     assert blocked == joined
 
 

@@ -1,7 +1,8 @@
 """Corpus-aware block sizing for semantic_dedup(strategy='blocked')
-(VERDICT r08 wrong #1 / next-round #1): block_rows=None derives a block
-size that bounds the pair-shuffle replication factor, an explicit
-undersized block_rows warns loudly, and neither path changes verdicts.
+(VERDICT r08 wrong #1 / next-round #1): the block size is derived from
+the largest cell so it bounds the pair-shuffle replication factor, a
+memory cap that forces replication past the bound warns loudly, and
+neither changes verdicts.
 """
 
 import math
@@ -11,6 +12,7 @@ import warnings
 import pytest
 from pyspark.sql import Row
 
+from aim357_2019_etl_and_ml_workshop_spark.operators import dedup
 from aim357_2019_etl_and_ml_workshop_spark.operators.dedup import (
     _BLOCK_REPL_TARGET,
     _BLOCK_REPL_WARN,
@@ -70,9 +72,8 @@ def _skewed_corpus(spark, n_hot=300, n_cold=12, dim=4, seed=7):
 
 
 def test_blocked_auto_sizing_parity_and_no_warning(spark):
-    """block_rows=None on a skewed corpus: derived size keeps replication
-    within target, emits no warning, and the verdicts are exactly the
-    joined form's."""
+    """A skewed corpus: the derived size keeps replication within target,
+    emits no warning, and the verdicts are exactly the joined form's."""
     df = _skewed_corpus(spark)
     kw = dict(threshold=0.8, n_sign_dims=1)
     joined = sorted(
@@ -84,8 +85,7 @@ def test_blocked_auto_sizing_parity_and_no_warning(spark):
         blocked = sorted(
             tuple(r)
             for r in semantic_dedup(
-                df, "vec_id", "embedding", strategy="blocked",
-                block_rows=None, **kw
+                df, "vec_id", "embedding", strategy="blocked", **kw
             ).collect()
         )
     assert blocked == joined
@@ -94,22 +94,27 @@ def test_blocked_auto_sizing_parity_and_no_warning(spark):
     assert math.ceil(300 / br) <= _BLOCK_REPL_TARGET
 
 
-def test_blocked_undersized_block_rows_warns_but_stays_correct(spark):
-    """An explicit block_rows that forces replication past the warn bound
-    (the PERF.md r8 780x-replica footgun) raises a loud UserWarning that
-    names the derived fix — and still produces identical verdicts
-    (block_rows never affects results, only the plan)."""
+def test_blocked_undersized_block_rows_warns_but_stays_correct(
+    spark, monkeypatch
+):
+    """A cell so large that the memory cap forces replication past the
+    warn bound (the PERF.md r8 780x-replica footgun) raises a loud
+    UserWarning that names the finer-cells fix — and still produces
+    identical verdicts (the block size never affects results, only the
+    plan). A cap of 2 rows stands in for a cell of ~256k vectors."""
     df = _skewed_corpus(spark)
     kw = dict(threshold=0.8, n_sign_dims=1)
     joined = sorted(
         tuple(r)
         for r in semantic_dedup(df, "vec_id", "embedding", **kw).collect()
     )
+    monkeypatch.setattr(dedup, "_BLOCK_ROWS_CAP", 2)
+    assert dedup.derive_semantic_block_rows(300) == 2  # the cap wins
     assert math.ceil(300 / 2) > _BLOCK_REPL_WARN  # the setup really trips it
     with pytest.warns(UserWarning, match=r"replicates each") as rec:
         out = semantic_dedup(
-            df, "vec_id", "embedding", strategy="blocked", block_rows=2, **kw
+            df, "vec_id", "embedding", strategy="blocked", **kw
         )
     blocked = sorted(tuple(r) for r in out.collect())
     assert blocked == joined
-    assert any("block_rows=None" in str(w.message) for w in rec)
+    assert any("finer cells" in str(w.message) for w in rec)

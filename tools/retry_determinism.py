@@ -52,9 +52,6 @@ DEFAULT_QUERIES = [
     # r7: per-doc reassembly via array_sort(collect_list(struct(pos,tok)))
     # — collect_list order is retry-dependent; the sort must neutralize it
     "substring_dedup_rewrite",
-    # r8: per-cell Arrow BLAS kernel on a recomputed scan — the verdict
-    # for a cell must not depend on which attempt produced its rows
-    "semantic_dedup_tiled",
     # r8: hash-prefilter + string-verified survivors across two agg
     # passes and a broadcast semi-join, all fed by retried scans
     "repeated_ngram_spans_hashed",

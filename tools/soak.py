@@ -109,7 +109,7 @@ EXCLUDE = {
         ),
     },
     "semantic_dedup_cells": {
-        "twins": ["semantic_dedup_tiled", "semantic_dedup_blocked"],
+        "twins": ["semantic_dedup_blocked"],
         "reason": (
             "SemDeDup-shaped exact baseline: within-cell all-pairs cosine is "
             "quadratic per cell BY ORACLE CONTRACT (the DuckDB twin recomputes "
@@ -118,7 +118,7 @@ EXCLUDE = {
             "Full-oracle at sf0.01/sf0.1 in the conformance gate, 50 s at sf1 "
             "measured once (PERF.md r7); the scale twin with IDENTICAL "
             "cell-constrained semantics AND the identical oracle — "
-            "semantic_dedup_tiled (r8, VERDICT r07 #1) — runs here"
+            "semantic_dedup_blocked (r8) — runs here"
         ),
     },
     "neardup_representatives": {
@@ -144,16 +144,15 @@ EXCLUDE = {
         ),
     },
     "semantic_dedup_fitted": {
-        "twins": ["semantic_dedup_tiled", "semantic_dedup_blocked"],
+        "twins": ["semantic_dedup_blocked"],
         "reason": (
             "fitted-cell composition contract (r9): re-derives the JOINED "
             "quadratic-by-contract form as in-query ground truth for the "
-            "tiled kernel on k-means cells, so it inherits "
+            "blocked kernel on k-means cells, so it inherits "
             "semantic_dedup_cells' per-cell all-pairs cost at soak SFs. "
             "Full-oracle at sf0.01 in the conformance gate; the fitted-cell "
             "plumbing is scale-invariant (cells enter as a column) and the "
-            "kernels it exercises soak via semantic_dedup_tiled / "
-            "semantic_dedup_blocked"
+            "kernel it exercises soaks via semantic_dedup_blocked"
         ),
     },
 }
