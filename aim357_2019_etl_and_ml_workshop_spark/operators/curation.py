@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .dedup import normalize_text, simhash_near_duplicates
+from .dedup import normalize_text, simhash_near_duplicates, token_windows
 from ..sources.io import local_df
 from .textanalysis import redact_pii
 
@@ -122,16 +122,10 @@ def curate_corpus(
     def grams(frame: DataFrame) -> DataFrame:
         toks = F.split(normalize_text(text_col), " ")
         t = frame.select(F.col(id_col), toks.alias("_toks"))
-        sh = F.when(
-            F.size("_toks") >= 5,
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.least(F.size("_toks") - 4, F.lit(decontam_prefix)),
-                ),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, 5)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        sh = token_windows(
+            F.col("_toks"), 5, lambda ws: F.concat_ws(" ", *ws),
+            limit=decontam_prefix,
+        )
         return t.select(id_col, F.explode(sh).alias("sh")).distinct()
 
     eval_sh = (
@@ -403,16 +397,9 @@ def _bloom_grams(
     d = frame.select(
         F.col(id_col), F.split(F.lower(text_col), " ").alias("_toks")
     )
-    n_grams = F.least(F.size("_toks") - (n - 1), F.lit(prefix))
-    gram_hash = F.when(
-        F.size("_toks") >= n,
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.xxhash64(
-                *[F.element_at(F.col("_toks"), i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    gram_hash = token_windows(
+        F.col("_toks"), n, lambda ws: F.xxhash64(*ws), limit=prefix
+    )
     return d.select(id_col, "_toks", F.posexplode(gram_hash).alias("_p", "h"))
 
 

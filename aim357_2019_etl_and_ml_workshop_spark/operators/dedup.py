@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 import warnings
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -60,41 +61,60 @@ def canonical_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def token_windows(
+    toks: Column,
+    n: int,
+    gram: Callable[[list[Column]], Column],
+    limit: int | None = None,
+) -> Column:
+    """``gram`` over every run of ``n`` consecutive tokens of the token array
+    ``toks``, in order: one element per window start, at most ``limit`` of
+    them (the first ones) when it is set. Fewer than ``n`` tokens, or a
+    NULL array, gives an empty array. ``gram`` receives the window's ``n``
+    tokens as columns, first token first.
+
+    The windows are ``arrays_zip`` of the ``n`` offset ``slice``s of
+    ``toks``, and ``gram`` runs in a lambda that reads only its own
+    argument. That is the invariant that keeps the kernel linear: ``toks``
+    appears only in the window bounds, evaluated once per row, never inside
+    the lambda. Catalyst may inline ``split(text, ' ')`` wherever the token
+    alias is referenced (collapsing projections, or pushing a filter on
+    the output below them); a reference inside the lambda would then
+    re-split the document once per window, O(tokens^2) per row."""
+    toks = F.coalesce(toks, F.array().cast("array<string>"))
+    count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    if limit is not None:
+        count = F.least(count, F.lit(limit))
+    windows = F.arrays_zip(*[F.slice(toks, j + 1, count) for j in range(n)])
+    return F.transform(windows, lambda w: gram([w[str(j)] for j in range(n)]))
+
+
 def ngram_array(toks: Column, n: int = 3) -> Column:
-    """ALL word n-grams (order-preserving, duplicates kept) from a
-    PRE-MATERIALIZED token array column. Callers must compute the token
-    array in its own projection (``.select(F.split(text, ' ')
-    .alias('toks'))``) so the split runs once per row — inlining the split
-    here would re-evaluate it per shingle index (O(tokens^2) splits/row, a
-    ~30x slowdown measured at sf0.1)."""
-
-    def gram(i: Column) -> Column:
-        return F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)])
-
-    # sequence(a, b) is DESCENDING when a > b, so short texts need an
-    # explicit empty-array branch, not a clamped bound.
-    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(0), F.size(toks) - n), gram)
-    )
+    """ALL word n-grams (order-preserving, duplicates kept) of a token
+    array column, each the window's tokens joined by one space. Built by
+    :func:`token_windows`, so ``toks`` may be any expression (for example
+    ``F.split(text, ' ')`` inline): the per-window lambda reads only its
+    own window, and the cost stays linear in the token count."""
+    return token_windows(toks, n, lambda ws: F.concat_ws(" ", *ws))
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (see ngram_array for the
-    pre-materialization contract)."""
+    """Distinct word n-gram shingles of a token array (see ngram_array)."""
     return F.array_distinct(ngram_array(toks, n))
 
 
 def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Shingles straight from a text column name — convenience for tiny
-    frames/tests; hot paths should materialize tokens and use
-    ``shingles_from_tokens``."""
+    """Shingles straight from a text column name: the raw text split on
+    single spaces, then :func:`shingles_from_tokens`."""
     return shingles_from_tokens(F.split(F.col(text_col), " "), n)
 
 
 def exploded_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, shingle) rows with the tokens materialized once per row.
+    """(id, shingle) rows: the raw text split on single spaces, then one
+    row per distinct n-gram (see ngram_array; the window lambda reads only
+    its own window, so the cost is linear in the token count).
 
     The input is spread to core count first (no-op when the scan already
     has enough splits): this is the corpus entry point of every shingle
@@ -1323,10 +1343,9 @@ def repeated_ngram_spans(
     oracle."""
     toks = F.split(normalize_text(text_col), " ")
     if not hash_spans:
-        # ngram_array is the module's single n-gram constructor (short
-        # texts -> empty array, so posexplode drops them — same effect as
-        # the old inline size>=n guard); posexplode yields the 0-based
-        # span position
+        # ngram_array (via token_windows, the module's single window
+        # constructor) gives short texts an empty array, so posexplode
+        # drops them; posexplode yields the 0-based span position
         spans = df.select(F.col(id_col), toks.alias("_toks")).select(
             id_col,
             F.posexplode(ngram_array(F.col("_toks"), n)).alias("pos", "ng"),
@@ -1352,16 +1371,10 @@ def repeated_ngram_spans(
 
     tok_df = df.select(F.col(id_col), toks.alias("_toks"))
     # hash-per-position n-gram array: same positions as ngram_array, but
-    # each span is one xxhash64 over the token SLICE — the n-token string
-    # never materializes in the frequency pass
-    hgrams = F.when(
-        F.size(F.col("_toks")) < n, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("_toks")) - n),
-            lambda i: F.xxhash64(F.slice(F.col("_toks"), i + 1, n)),
-        )
-    )
+    # each span is one xxhash64 over its n tokens (the same value as over
+    # the token slice: xxhash64 folds array elements and arguments alike)
+    # — the n-token string never materializes in the frequency pass
+    hgrams = token_windows(F.col("_toks"), n, lambda ws: F.xxhash64(*ws))
     hspans = tok_df.select(
         id_col, F.posexplode(hgrams).alias("pos", "hg")
     )

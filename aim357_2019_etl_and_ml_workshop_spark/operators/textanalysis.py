@@ -272,20 +272,24 @@ def repetition_filter(
     repeated-n-gram heuristic): rep_ratio = 1 - distinct/total word
     n-grams; documents above ``max_ratio`` are flagged for removal.
 
-    Pure built-ins over a single projection (tokens materialized once per
-    row, then array transforms) — zero shuffles, linear scan, whole-stage
-    codegen. The keep decision uses the ROUNDED ratio so the threshold cut
-    is reproducible across engines."""
+    Pure built-ins over a single projection — zero shuffles, linear scan,
+    whole-stage codegen. The n-gram count is arithmetic (one window per
+    start position); only the distinct count builds the n-gram array, and
+    its window lambda reads only its own window (see dedup.token_windows),
+    so a filter on ``keep`` that Catalyst pushes below the projection
+    stays linear in the token count. The keep decision uses the ROUNDED
+    ratio so the threshold cut is reproducible across engines."""
     from .dedup import ngram_array
 
     toks = df.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
     )
-    grams = ngram_array(F.col("_toks"), n)
     with_counts = toks.select(
         id_col,
-        F.size(grams).alias("_total"),
-        F.size(F.array_distinct(grams)).alias("_distinct"),
+        F.greatest(F.size("_toks") - (n - 1), F.lit(0)).alias("_total"),
+        F.size(F.array_distinct(ngram_array(F.col("_toks"), n))).alias(
+            "_distinct"
+        ),
     )
     ratio = F.when(F.col("_total") <= 0, F.lit(0.0)).otherwise(
         F.round(1 - F.col("_distinct") / F.col("_total"), 6)

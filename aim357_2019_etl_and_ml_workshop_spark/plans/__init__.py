@@ -4,6 +4,8 @@ that small-side joins broadcast, instead of hoping."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -57,3 +59,32 @@ def single_partition_exchanges(df: DataFrame) -> list[str]:
             continue
         hits.append(line.strip()[:160])
     return hits
+
+
+_TOKENIZER_CALL = re.compile(r"(?<!\w)(?:split|regexp_extract_all)\(")
+
+
+def lambda_tokenizer_calls(df: DataFrame) -> int:
+    """Tokenizer calls (``split(``, ``regexp_extract_all(``) that sit inside
+    a ``lambdafunction(...)`` body of the optimized plan. Each one runs
+    once per array element, so a document tokenized inside a per-window
+    lambda costs O(tokens^2) per row; a linear text kernel keeps this at 0
+    after every Catalyst rewrite (filter pushdown, projection collapse).
+    Bodies are delimited by bracket depth, so a string literal with an
+    unbalanced parenthesis inside a lambda can misplace its end."""
+    # verbose tree with no field cap, so long projection lists stay whole
+    plan = df._jdf.queryExecution().optimizedPlan().treeString(
+        True, False, 2**31 - 1, False, False
+    )
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth = 0
+        for end in range(m.end() - 1, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append((m.start(), end))
+    return sum(
+        any(a < m.start() < b for a, b in bodies)
+        for m in _TOKENIZER_CALL.finditer(plan)
+    )

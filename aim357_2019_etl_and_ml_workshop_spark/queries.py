@@ -4158,10 +4158,10 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination — the training-data hygiene op: flag corpus
     documents sharing any 5-gram with a held-out eval set (here the
     doc_id%97 pseudo-benchmark), reporting distinct overlapping shingles
-    per contaminated doc. Word 5-grams via one array transform (tokens
-    materialized once); the eval shingle set is small BY DESIGN (held-out
-    benchmarks are fixed-size, they do not grow with the corpus), so it
-    broadcasts. The load-bearing order: corpus shingles probe the
+    per contaminated doc. Word 5-grams via one array transform over the
+    token windows (linear in tokens: see dedup.token_windows); the eval
+    shingle set is small BY DESIGN (held-out benchmarks are fixed-size,
+    they do not grow with the corpus), so it broadcasts. The load-bearing order: corpus shingles probe the
     broadcast eval set FIRST, map-side inside the scan stage, and only
     the overlap survivors — a sliver of the corpus — reach the
     de-duplicating shuffle. Distinct-then-filter == filter-then-distinct
@@ -4178,24 +4178,19 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     can only add a FILTERED row, never a counted one, and the result
     stays exact-match to the oracle. Exact oracle; minhash_near_duplicates
     is the probabilistic scale-out twin."""
-    # tokens materialized in their own projection: inlining the split inside
-    # the transform lambda re-evaluates it per shingle index (O(tokens^2))
+    from .operators.dedup import token_windows
+
     d = spread_for_cpu(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.split(F.lower("text"), " ").alias("_toks")
     )
-    # gram positions 1..min(len-4, 200): the 200-gram prefix cap is part of
-    # the query contract (mirrors the oracle's generate_series(1, 200) and
+    # one hash per 5-token window (token_windows: the window lambda reads
+    # only its own window, so the split never re-runs per gram); windows
+    # 1..min(len-4, 200): the 200-gram prefix cap is part of the query
+    # contract (mirrors the oracle's generate_series(1, 200) and
     # curation.py's decontam_prefix — bounds the explode at any doc length)
-    n_grams = F.least(F.size("_toks") - 4, F.lit(200))
-    gram_hash = F.when(
-        F.size("_toks") >= 5,
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.xxhash64(
-                *[F.element_at(F.col("_toks"), i + j) for j in range(5)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    gram_hash = token_windows(
+        F.col("_toks"), 5, lambda ws: F.xxhash64(*ws), limit=200
+    )
     gram_str = lambda pos: F.concat_ws(  # noqa: E731 — built for survivors only
         " ", F.slice(F.col("_toks"), pos, 5)
     )

@@ -392,32 +392,34 @@ def test_incremental_dedup_equals_selfjoin_over_union(spark, docs, split):
     width=st.integers(min_value=1, max_value=9),
 )
 def test_distributed_rank_stats_matches_window_any_width(spark, rows, width):
-    """Range-split local ranks + broadcast offsets must equal the built-in
-    one-task-per-part window for ANY split width, part skew, and order-value
+    """Range-split local ranks + broadcast offsets must equal the window
+    functions' definitions for ANY split width, part skew, and order-value
     tie pattern — the unique id appended as tiebreaker makes the order
-    total, which is the operator's stated contract."""
-    from pyspark.sql import Window
+    total, which is the operator's stated contract. The reference is the
+    pure-python definition of percent_rank/cume_dist/dense_rank (rounded
+    HALF_UP like Spark's round); test_analytics' slow-lane twin compares
+    against the built-in window itself."""
+    from decimal import ROUND_HALF_UP, Decimal
 
     from aim357_2019_etl_and_ml_workshop_spark.operators.analytics import (
         distributed_rank_stats,
     )
 
-    df = spark.createDataFrame(
-        [(i, p, v, d) for i, (p, v, d) in enumerate(rows)],
-        "k long, part string, v long, lvl string",
-    ).repartition(3)
+    def rnd(x: float) -> float:
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
-    w = Window.partitionBy("part").orderBy("v", "k")
-    wp = Window.partitionBy("part").orderBy("lvl")
-    ref = {
-        r["k"]: (r["pr"], r["cd"], r["dr"])
-        for r in df.select(
-            "k",
-            F.round(F.percent_rank().over(w), 6).alias("pr"),
-            F.round(F.cume_dist().over(w), 6).alias("cd"),
-            F.dense_rank().over(wp).alias("dr"),
-        ).collect()
-    }
+    keyed = [(i, p, v, d) for i, (p, v, d) in enumerate(rows)]
+    ref = {}
+    for part in {p for _, p, _, _ in keyed}:
+        members = sorted((v, k, d) for k, p, v, d in keyed if p == part)
+        n, levels = len(members), sorted({d for _, _, d in members})
+        for rank, (_, k, d) in enumerate(members, start=1):
+            pr = (rank - 1) / (n - 1) if n > 1 else 0.0
+            ref[k] = (rnd(pr), rnd(rank / n), levels.index(d) + 1)
+
+    df = spark.createDataFrame(
+        keyed, "k long, part string, v long, lvl string"
+    ).repartition(3)
     got = {
         r["k"]: (r["pr"], r["cd"], r["dr"])
         for r in distributed_rank_stats(
