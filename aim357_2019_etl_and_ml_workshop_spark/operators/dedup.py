@@ -989,8 +989,6 @@ def embedding_near_duplicates(
     n_tables: int = 16,
     n_bits: int = 4,
     max_bucket_size: int | None = 100_000,
-    broadcast_max_rows: int = 2_000_000,
-    broadcast_max_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Embedding-cosine near-dup (SURVEY.md §2.12), adaptive strategy:
     while the vector matrix fits the broadcast byte budget the answer is
@@ -1012,10 +1010,10 @@ def embedding_near_duplicates(
     verify then looks vectors up from a broadcast id->vector matrix inside
     one Arrow-batched numpy kernel (embeddings fit comfortably: verify
     capacity is bounded by the same broadcast budget as every dim-table
-    join). Above ``broadcast_max_rows`` OR ``broadcast_max_bytes``
-    (rows x dim x 8 — the dim-aware budget) the verify falls back to
-    re-attaching vectors with two shuffle joins against the (deduped, so
-    1x not n_tables x) pair set."""
+    join). Past the gather budget (similarity._GATHER_MAX_ROWS rows OR
+    _GATHER_MAX_BYTES of rows x dim x 8 — the dim-aware budget) the
+    verify falls back to re-attaching vectors with two shuffle joins
+    against the (deduped, so 1x not n_tables x) pair set."""
     from .similarity import (
         _collect_gather,
         _multi_table_buckets,
@@ -1056,9 +1054,7 @@ def embedding_near_duplicates(
     # EXACT (recall 1.0), zero pair shuffle, BLAS-rate compute. Past the
     # budget (true corpus scale) the banded path below is the plan — its
     # cost is gap-governed, which is the honest LSH contract.
-    gather = _collect_gather(
-        vecs, broadcast_max_rows, broadcast_max_bytes, int(first["d"])
-    )
+    gather = _collect_gather(vecs, int(first["d"]))
     if gather is not None:
         return _tiled_matmul_pairs(df.sparkSession, gather, threshold)
     all_planes = [

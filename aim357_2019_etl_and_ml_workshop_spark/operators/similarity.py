@@ -81,7 +81,7 @@ def _gather_broadcast(spark, gather: tuple):
     The lock covers only dict bookkeeping. The expensive steps — the
     ~100 MB ``sc.broadcast`` serialization on a miss, and every
     destroy()/unpersist() py4j round-trip — run OUTSIDE it (same
-    build-outside-the-lock pattern as queries._t): a racing thread may
+    build-outside-the-lock pattern as sources.io.memo): a racing thread may
     build the same gather twice, in which case the loser's broadcast is
     destroyed immediately (never exposed, so no plan can hold it)."""
     import hashlib
@@ -683,22 +683,25 @@ def _pair_cosine_udf():
     return pair_cos
 
 
-def _collect_gather(
-    vecs: DataFrame,
-    max_rows: int,
-    max_bytes: int,
-    dim: int,
-) -> tuple | None:
+# Gather budget shared by every _collect_gather caller: a vector table
+# broadcasts whole only while it fits BOTH caps; past either, the caller
+# takes its join-attach (or banded) fallback.
+_GATHER_MAX_ROWS = 2_000_000
+_GATHER_MAX_BYTES = 512 << 20
+
+
+def _collect_gather(vecs: DataFrame, dim: int) -> tuple | None:
     """Collect a 2-column (id, vector) frame into an id-sorted gather
     triple (ids int64[], matrix float64[n,dim], norms float64[]) iff it
-    fits BOTH the row cap and the byte budget — else None (caller takes
-    the join-attach fallback). The budget is bytes = rows * dim * 8, so a
-    768-dim table hits its ceiling ~12x earlier than a 64-dim one at the
-    same row cap (the row-only guard was dim-blind — ADVICE r03). One
-    bounded job: ``limit(cap+1).collect()`` both measures and fetches, so
-    no separate count() action, and an over-budget table aborts after
-    cap+1 rows instead of materializing everything on the driver."""
-    cap = min(max_rows, max(max_bytes // (dim * 8), 1))
+    fits BOTH ``_GATHER_MAX_ROWS`` and ``_GATHER_MAX_BYTES`` — else None
+    (caller takes the join-attach fallback). The budget is bytes = rows *
+    dim * 8, so a 768-dim table hits its ceiling ~12x earlier than a
+    64-dim one at the same row cap (the row-only guard was dim-blind —
+    ADVICE r03). One bounded job: ``limit(cap+1).collect()`` both
+    measures and fetches, so no separate count() action, and an
+    over-budget table aborts after cap+1 rows instead of materializing
+    everything on the driver."""
+    cap = min(_GATHER_MAX_ROWS, max(_GATHER_MAX_BYTES // (dim * 8), 1))
     rows = vecs.limit(cap + 1).collect()
     if len(rows) > cap:
         return None
@@ -1076,8 +1079,6 @@ def lsh_topk(
     seed: int = 42,
     dim: int | None = None,
     multiprobe: int = 0,
-    broadcast_max_rows: int = 2_000_000,
-    broadcast_max_bytes: int = 512 << 20,
     bucket_state: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: classic multi-table hyperplane LSH.
@@ -1201,12 +1202,7 @@ def lsh_topk(
     # the dedup and letting the kernel drop duplicates locally moved 41M
     # rows instead of 8M and was strictly slower.)
     pairs = raw.dropDuplicates(["q_id", "c_id"])
-    gather = _collect_gather(
-        candidates.select(id_col, vec_col),
-        broadcast_max_rows,
-        broadcast_max_bytes,
-        dim,
-    )
+    gather = _collect_gather(candidates.select(id_col, vec_col), dim)
     if gather is not None:
         # Candidate vectors fit the row AND byte budget (one bounded
         # limit+collect job, no count() action): ship only bare

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import pin_session_conf
-from .sources.io import TESTDATA_TABLES
+from .sources.io import TESTDATA_TABLES, _t
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -21,12 +21,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for the session scope; persistent-catalog registration lives in
     sources.io.register_catalog_table).
 
-    The views come from the registry's reader memo (queries._t), so only
+    The views come from the engine's reader memo (sources.io._t), so only
     the first call per (session, sf_dir) pays the ten parquet
-    schema-inference jobs; a repeat call starts no Spark job. Imported
-    lazily: queries imports this module inside its SQL-surface queries."""
-    from .queries import _t
-
+    schema-inference jobs; a repeat call starts no Spark job."""
     for t in TESTDATA_TABLES:
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
 

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from aim357_2019_etl_and_ml_workshop_spark.operators import similarity
 from aim357_2019_etl_and_ml_workshop_spark.operators.dedup import (
     canonical_dedup,
     exact_dedup,
@@ -787,6 +788,42 @@ def test_lsh_multiprobe_improves_recall(spark, sf_dir):
     assert r_multi >= 0.9
 
 
+def test_lsh_topk_join_attach_fallback_matches_gather(spark, monkeypatch):
+    """Past the gather budget lsh_topk re-attaches candidate vectors with
+    an equi-join instead of broadcasting them; both paths rank the same
+    candidate pairs with the same kernel, so on the sf0.01 embeddings they
+    return the same top-k rows. The row cap is lowered to force the
+    fallback, and the broadcast is spied on to prove which path ran."""
+    import os
+
+    from conftest import SF_SMALL
+
+    sf001 = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+    emb = read_testdata(spark, sf001, "embeddings").select(
+        "vec_id", as_double_vec("embedding").alias("v")
+    )
+    q = emb.where(F.col("vec_id") % 40 == 0)
+    broadcasts = []
+    real = similarity._gather_broadcast
+
+    def spy(spark_, gather):
+        broadcasts.append(len(gather[0]))
+        return real(spark_, gather)
+
+    monkeypatch.setattr(similarity, "_gather_broadcast", spy)
+
+    def top(df):
+        return sorted((r.q_id, r.c_id, r.sim) for r in df.collect())
+
+    gathered = top(lsh_topk(emb, q, k=5))
+    assert broadcasts == [500]
+    monkeypatch.setattr(similarity, "_GATHER_MAX_ROWS", 4)
+    attached = top(lsh_topk(emb, q, k=5))
+    assert broadcasts == [500]  # no second broadcast: the join path ran
+    assert len(gathered) == 5 * q.count()
+    assert attached == gathered
+
+
 def test_fuzzy_substitution_pairs_complete(spark):
     """Pigeonhole slice blocking must equal the all-pairs scan at
     max_subs <= chunks-1, and reject impossible parameters."""
@@ -1079,12 +1116,13 @@ def test_screen_exact_duplicates_flags_cross_side_dups(spark):
     assert got == {10: True, 11: False}
 
 
-def test_embedding_neardup_tiled_exact_and_banded_agree(spark):
+def test_embedding_neardup_tiled_exact_and_banded_agree(spark, monkeypatch):
     """embedding_near_duplicates' in-budget strategy (tiled matmul sweep)
     must equal the numpy brute-force pair set EXACTLY — it is not an
-    approximation — and the over-budget banded-LSH fallback (forced via a
-    tiny broadcast_max_rows) must be a verified subset that still recalls
-    every high-similarity pair on this geometry (deterministic seeds)."""
+    approximation — and the over-budget banded-LSH fallback (forced by
+    lowering the gather row cap) must be a verified subset that still
+    recalls every high-similarity pair on this geometry (deterministic
+    seeds)."""
     import numpy as np
 
     from aim357_2019_etl_and_ml_workshop_spark.operators.dedup import (
@@ -1118,10 +1156,11 @@ def test_embedding_neardup_tiled_exact_and_banded_agree(spark):
     for k in expect:
         assert abs(tiled[k] - expect[k]) <= 1e-6
 
+    monkeypatch.setattr(similarity, "_GATHER_MAX_ROWS", 4)
     banded = {
         (r.id_a, r.id_b)
         for r in embedding_near_duplicates(
-            df, "vec_id", "v", threshold=0.9, broadcast_max_rows=4
+            df, "vec_id", "v", threshold=0.9
         ).collect()
     }
     assert banded <= set(expect)

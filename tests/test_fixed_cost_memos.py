@@ -71,20 +71,24 @@ def test_pin_session_conf_repins_when_marker_cleared():
     assert s.conf.set_calls > before  # full pin ran again
 
 
+def _spread_decisions() -> list:
+    return [v for k, v in iom._MEMO.items() if k[0] == "spread"]
+
+
 def test_spread_probe_memo_matches_direct_probe(spark, sf_dir):
     from aim357_2019_etl_and_ml_workshop_spark import queries as q
 
-    iom._SPREAD_PROBE_CACHE.clear()
+    iom.clear_reader_cache()
     base = q._t(spark, sf_dir, "documents")
     fresh = base.select("doc_id", "text")
     direct = fresh.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
     out = iom.spread_for_cpu(base.select("doc_id", "text"))
-    assert len(iom._SPREAD_PROBE_CACHE) == 1
-    (cached_decision,) = iom._SPREAD_PROBE_CACHE.values()
+    assert len(_spread_decisions()) == 1
+    (cached_decision,) = _spread_decisions()
     assert cached_decision == direct
     # memoized second call: same decision object path, no new entries
     out2 = iom.spread_for_cpu(base.select("doc_id", "text"))
-    assert len(iom._SPREAD_PROBE_CACHE) == 1
+    assert len(_spread_decisions()) == 1
     # the spread decision changes the plan only when it should
     spread_applied = "Exchange" in out._jdf.queryExecution().toString()
     assert spread_applied == direct
@@ -94,7 +98,7 @@ def test_spread_probe_memo_matches_direct_probe(spark, sf_dir):
 def test_spread_probe_memo_key_varies_with_split_conf(spark, sf_dir):
     from aim357_2019_etl_and_ml_workshop_spark import queries as q
 
-    iom._SPREAD_PROBE_CACHE.clear()
+    iom.clear_reader_cache()
     base = q._t(spark, sf_dir, "documents")
     key_conf = "spark.sql.files.maxPartitionBytes"
     prev = spark.conf.get(key_conf)
@@ -102,7 +106,7 @@ def test_spread_probe_memo_key_varies_with_split_conf(spark, sf_dir):
     try:
         spark.conf.set(key_conf, str(1024 * 1024))
         iom.spread_for_cpu(base.select("doc_id", "text"))
-        assert len(iom._SPREAD_PROBE_CACHE) == 2  # conf in the key -> miss
+        assert len(_spread_decisions()) == 2  # conf in the key -> miss
     finally:
         spark.conf.set(key_conf, prev)
 

@@ -150,25 +150,27 @@ def test_minhash_plan_shares_shingle_table(spark, sf_dir):
 
 
 def test_reader_cache_bounded(spark, sf_dir, monkeypatch):
-    """_READER_CACHE is an LRU with a hard entry cap: a long-lived service
-    looping many sf_dirs must not accumulate logical plans without bound
-    (VERDICT r04 #3). Exercised with the cap lowered so a handful of real
-    readers overflow it; also proves clear_reader_cache() empties it."""
+    """The engine memo is an LRU with a hard entry cap: a long-lived
+    service looping many sf_dirs must not accumulate logical plans without
+    bound (VERDICT r04 #3). Exercised with the cap lowered so a handful of
+    real readers overflow it; also proves clear_reader_cache() empties it."""
+    from aim357_2019_etl_and_ml_workshop_spark.sources import io as iom
+
     q.clear_reader_cache()
-    monkeypatch.setattr(q, "_READER_CACHE_MAX", 3)
+    monkeypatch.setattr(iom, "_MEMO_MAX", 3)
     for table in ("region", "nation", "customer", "supplier", "part"):
         q._t(spark, sf_dir, table)
-    assert len(q._READER_CACHE) == 3
+    assert len(iom._MEMO) == 3
     # LRU order: most recent three survive
-    kept = {k[2] for k in q._READER_CACHE}
+    kept = {k[3] for k in iom._MEMO}
     assert kept == {"customer", "supplier", "part"}
     # a hit refreshes recency: touch 'customer', add one more, 'supplier'
     # is now the eviction victim
     q._t(spark, sf_dir, "customer")
     q._t(spark, sf_dir, "orders")
-    assert {k[2] for k in q._READER_CACHE} == {"customer", "part", "orders"}
+    assert {k[3] for k in iom._MEMO} == {"customer", "part", "orders"}
     q.clear_reader_cache()
-    assert len(q._READER_CACHE) == 0
+    assert len(iom._MEMO) == 0
 
 
 def test_cte_recursion_limit_restored(spark, sf_dir):
