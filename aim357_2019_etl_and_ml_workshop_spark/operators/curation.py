@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .dedup import normalize_text, simhash_near_duplicates, token_windows
-from ..sources.io import local_df
+from ..sources.io import cached, local_df
 from .textanalysis import redact_pii
 
 
@@ -58,15 +58,16 @@ def curate_corpus(
     input/quality/language/exact counts ride as ``observe()`` metric nodes
     in the plan and are all populated by the (eager) simhash
     materialization job — no dedicated count actions (VERDICT r02 #6).
-    The branching stages (neardup, decontam) keep bounded ``count()``
-    actions on their cached frames: their subtrees feed two consumers
-    each, and a metrics node below a multi-consumer branch would be
-    double-executed before its cache fills. 4 jobs total (was 8); every
-    count is still recomputed independently by the oracle SQL."""
+    The branching neardup stage keeps a bounded ``count()`` on its cached
+    frame: it feeds two consumers, and a metrics node below a
+    multi-consumer branch would be double-executed before its cache
+    fills. The decontam count rides that stage's eager checkpoint job as
+    another ``observe()`` metric. 4 jobs total (was 8); every count is
+    still recomputed independently by the oracle SQL."""
     from pyspark.sql import Observation
 
-    o_input, o_quality, o_lang, o_exact = (
-        Observation() for _ in range(4)
+    o_input, o_quality, o_lang, o_exact, o_decontam = (
+        Observation() for _ in range(5)
     )
     norm = normalize_text(text_col)
     base = docs.select(
@@ -101,20 +102,7 @@ def curate_corpus(
         .where(F.col(id_col) == F.col("_min_id"))
         .drop("_min_id")
         .observe(o_exact, F.count(F.lit(1)).alias("n"))
-        .persist()  # feeds the simhash pipeline and the anti join; also
-        # guards the observe nodes above from re-execution (later actions
-        # read the cache, so each metric fires exactly once)
     )
-
-    # near-dup dedup over survivors: portable simhash pairs (complete at
-    # max_hamming <= chunks-1), keep-lowest-id rule — any doc appearing as
-    # the higher id of a pair is dropped
-    pairs = simhash_near_duplicates(
-        exact, text_col, id_col, max_hamming=3, chunks=4,
-        bits=60, hash_fn="portable60", eager_release=True,
-    )
-    drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    neardup = exact.join(drop_ids, id_col, "left_anti").persist()
 
     # decontamination: docs sharing any 5-gram (first `decontam_prefix`
     # positions) with the eval pseudo-benchmark (id % eval_mod == 0 over
@@ -133,16 +121,35 @@ def curate_corpus(
         .select("sh")
         .distinct()
     )
-    contaminated = (
-        grams(neardup).join(F.broadcast(eval_sh), "sh")
-        .select(id_col)
-        .distinct()
-    )
-    decontam = (
-        neardup.where(F.col(id_col) % eval_mod != 0)
-        .join(contaminated, id_col, "left_anti")
-        .persist()
-    )
+
+    # `exact` feeds the simhash pipeline and the anti join, and the cache
+    # guards the observe nodes above from re-execution (later actions
+    # read the cache, so each metric fires exactly once)
+    with cached(exact) as exact:
+        # near-dup dedup over survivors: portable simhash pairs (complete
+        # at max_hamming <= chunks-1), keep-lowest-id rule — any doc
+        # appearing as the higher id of a pair is dropped
+        pairs = simhash_near_duplicates(
+            exact, text_col, id_col, max_hamming=3, chunks=4,
+            bits=60, hash_fn="portable60",
+        )
+        drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
+        with cached(exact.join(drop_ids, id_col, "left_anti")) as neardup:
+            # count the neardup cache in first, so decontam's two neardup
+            # consumers read it
+            n_neardup = neardup.count()
+            contaminated = (
+                grams(neardup).join(F.broadcast(eval_sh), "sh")
+                .select(id_col)
+                .distinct()
+            )
+            # checkpointed: the returned `curated` frame is built on it
+            decontam = (
+                neardup.where(F.col(id_col) % eval_mod != 0)
+                .join(contaminated, id_col, "left_anti")
+                .observe(o_decontam, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
 
     # redaction (transform, not a filter) + packing assignment
     packed = decontam.select(
@@ -163,12 +170,8 @@ def curate_corpus(
         .cast("bigint"),
     )
 
-    # materialize the branching stages' caches BEFORE the packing count so
-    # decontam's two neardup consumers read the cache, then gather the
-    # linear-prefix counts from the observation metrics (populated by the
-    # eager simhash job — .get does not block here)
-    n_neardup = neardup.count()
-    n_decontam = decontam.count()
+    # the other counts come from the observation metrics, populated by
+    # the eager simhash and decontam jobs (.get does not block here)
     n_packs = curated.select(lang_col, "shard", "bin").distinct().count()
     spark: SparkSession = docs.sparkSession
     funnel = local_df(spark, 
@@ -178,19 +181,11 @@ def curate_corpus(
             (2, "language", o_lang.get["n"]),
             (3, "exact_dedup", o_exact.get["n"]),
             (4, "neardup_dedup", n_neardup),
-            (5, "decontaminated", n_decontam),
+            (5, "decontaminated", o_decontam.get["n"]),
             (6, "packed_bins", n_packs),
         ],
         "stage_idx int, stage string, n bigint",
     )
-    # All funnel actions are done and every downstream cached frame is
-    # materialized — release the upstream caches so repeated calls in a
-    # long-lived session don't accumulate corpus-scale blocks. `decontam`
-    # stays cached: it is the lineage root of the returned `curated` frame
-    # (callers release it by unpersisting `curated`'s source or letting
-    # session LRU evict one bounded frame, not four).
-    exact.unpersist(blocking=False)
-    neardup.unpersist(blocking=False)
     return funnel, curated
 
 
@@ -248,7 +243,7 @@ def leakage_safe_split(
 
     pairs = simhash_near_duplicates(
         docs, text_col, id_col, max_hamming=3, chunks=4,
-        bits=60, hash_fn="portable60", eager_release=True,
+        bits=60, hash_fn="portable60",
     )
     comps = connected_components(pairs).withColumnRenamed("id", id_col)
     withc = docs.select(F.col(id_col)).join(comps, id_col, "left").select(

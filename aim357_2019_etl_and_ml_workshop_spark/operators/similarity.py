@@ -26,10 +26,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 
-from ..sources.io import local_df
+from ..sources.io import cached, local_df
 
 
 import threading
+from contextlib import nullcontext
 
 _GATHER_BC_LOCK = threading.Lock()
 _GATHER_BC_CACHE: dict = {}
@@ -954,45 +955,6 @@ def _local_topk_merge(
     return ranked.where(F.col("rn") <= k).select("q_id", "c_id", "sim")
 
 
-def _query_cosine_udf(qmap: dict):
-    """Cosine of each candidate vector against a SMALL query set carried in
-    the closure (queries are small by the top-k contract): Arrow ships only
-    (q_id, candidate vector) per pair — query vectors never ride the join
-    or the dedup shuffle."""
-    ids = sorted(qmap)
-    qm = np.stack([qmap[i] for i in ids])
-    qnorm = np.linalg.norm(qm, axis=1)
-    index = {i: k for k, i in enumerate(ids)}
-
-    @pandas_udf("double")
-    def qcos(qids: pd.Series, cvs: pd.Series) -> pd.Series:
-        cm = np.stack(cvs.to_numpy())
-        rows = qids.map(index).to_numpy()
-        num = np.einsum("ij,ij->i", qm[rows], cm)
-        den = qnorm[rows] * np.linalg.norm(cm, axis=1)
-        return pd.Series(np.round(num / den, 6))
-
-    return qcos
-
-
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str,
-    planes: list[list[float]],
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Sign-of-projection bucket id: bit i = 1 iff dot(v, plane_i) > 0."""
-    bucket = None
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(F.col(vec_col), plane) > 0, F.lit(1).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        term = F.shiftleft(bit, i)
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
-    return df.withColumn(out_col, bucket)
-
-
 def _multi_table_buckets(
     df: DataFrame,
     vec_col: str,
@@ -1266,23 +1228,24 @@ def ivf_centroids(
             .collect()
         )
     cents = [list(r[vec_col]) for r in seeds]
-    fit_on = vectors
-    if sample_rows is not None and n > sample_rows:
-        fit_on = vectors.sample(fraction=min(1.0, sample_rows / n), seed=42)
-        fit_on.persist()
-    for _ in range(n_iters):
-        assigned = _assign_cells(fit_on, vec_col, cents).select(
-            "cell", F.col(vec_col).alias("v")
-        )
-        dim = len(cents[0])
-        sums = assigned.groupBy("cell").agg(
-            *[F.sum(F.element_at(F.col("v"), i + 1)).alias(f"s{i}") for i in range(dim)],
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        new = {int(r["cell"]): [r[f"s{i}"] / r["cnt"] for i in range(dim)] for r in sums.collect()}
-        cents = [new.get(i, c) for i, c in enumerate(cents)]
-    if fit_on is not vectors:
-        fit_on.unpersist()
+    sampled = sample_rows is not None and n > sample_rows
+    fit_on = (
+        vectors.sample(fraction=min(1.0, sample_rows / n), seed=42)
+        if sampled else vectors
+    )
+    # a sample feeds every Lloyd pass, so it is cached for the fit
+    with cached(fit_on) if sampled else nullcontext():
+        for _ in range(n_iters):
+            assigned = _assign_cells(fit_on, vec_col, cents).select(
+                "cell", F.col(vec_col).alias("v")
+            )
+            dim = len(cents[0])
+            sums = assigned.groupBy("cell").agg(
+                *[F.sum(F.element_at(F.col("v"), i + 1)).alias(f"s{i}") for i in range(dim)],
+                F.count(F.lit(1)).alias("cnt"),
+            )
+            new = {int(r["cell"]): [r[f"s{i}"] / r["cnt"] for i in range(dim)] for r in sums.collect()}
+            cents = [new.get(i, c) for i, c in enumerate(cents)]
     return cents
 
 

@@ -39,6 +39,7 @@ from .operators.timeseries import (
 from .session import pin_session_conf
 from .sources.io import (  # noqa: F401  (clear_reader_cache: API.md §2)
     _t,
+    cached,
     clear_reader_cache,
     local_df,
     memo,
@@ -3188,8 +3189,7 @@ def neardup_clusters_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", threshold=0.05, num_hashes=32, bands=16,
-        eager_release=True,
+        docs, "text", "doc_id", threshold=0.05, num_hashes=32, bands=16
     )
     return connected_components(pairs, "id_a", "id_b")
 
@@ -3358,16 +3358,16 @@ def grouping_sets_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-column rollups + grand total in ONE pass over the fact table
     (Spark Expand operator — one scan, not three). grouping() flags
     disambiguate real NULLs from set placeholders."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
                CAST(grouping(o_orderpriority) AS BIGINT) AS g_prio,
                count(*) AS n
-        FROM _gs_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -4404,19 +4404,16 @@ def lsh_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001 and sf0.01, so the contract tightens to >= 0.9 (margin for
     geometry drift); plain-probe pytest keeps its own looser bound.
 
-    Both sides are persisted across the three consuming actions (total,
+    Both sides are cached across the three consuming actions (total,
     hit join, distinct-query count) — without the cache the brute-force
     exact top-k (the expensive side, |Q|x|N| dot products) re-executes
     per action, tripling the cost at soak SFs."""
-    exact = embedding_cosine_topk(spark, sf_dir).select("q_id", "c_id").persist()
-    approx = lsh_ann_topk_query(spark, sf_dir).select("q_id", "c_id").persist()
-    try:
+    exact = embedding_cosine_topk(spark, sf_dir).select("q_id", "c_id")
+    approx = lsh_ann_topk_query(spark, sf_dir).select("q_id", "c_id")
+    with cached(exact), cached(approx):
         total = exact.count()
         hits = exact.join(approx, ["q_id", "c_id"]).count()
         n_queries = exact.select("q_id").distinct().count()
-    finally:
-        exact.unpersist(blocking=False)
-        approx.unpersist(blocking=False)
     return local_df(spark, 
         [(n_queries, 5, hits / total >= 0.9)],
         "n_queries bigint, k int, recall_ge_09 boolean",
@@ -4435,17 +4432,14 @@ def ivf_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     as lsh_recall_check (measured 0.68-0.74 at the conformance SFs for
     isotropic embeddings; n_probe=8/16 measures 0.80-0.86 across
     sf0.001-sf0.1 at no join cost — probes fan out query-side only;
-    contracted at >= 0.7). Both sides persisted across the three
+    contracted at >= 0.7). Both sides cached across the three
     consuming actions, as in lsh_recall_check."""
-    exact = embedding_cosine_topk(spark, sf_dir).select("q_id", "c_id").persist()
-    approx = ivf_ann_topk_query(spark, sf_dir).select("q_id", "c_id").persist()
-    try:
+    exact = embedding_cosine_topk(spark, sf_dir).select("q_id", "c_id")
+    approx = ivf_ann_topk_query(spark, sf_dir).select("q_id", "c_id")
+    with cached(exact), cached(approx):
         total = exact.count()
         hits = exact.join(approx, ["q_id", "c_id"]).count()
         n_queries = exact.select("q_id").distinct().count()
-    finally:
-        exact.unpersist(blocking=False)
-        approx.unpersist(blocking=False)
     return local_df(spark, 
         [(n_queries, 5, hits / total >= 0.7)],
         "n_queries bigint, k int, recall_ge_07 boolean",
@@ -4479,23 +4473,20 @@ def minhash_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # Both comparison frames are consumed by several counting actions;
-    # without persisting, the quadratic exact join re-executes once per
-    # action (4x) and the LSH pipeline 3x — at sf1 that turned a ~75 s
-    # check into 445 s. The persisted frames are the small RESULT pair
-    # lists, not the quadratic intermediates.
+    # without materializing them, the quadratic exact join re-executes
+    # once per action (4x) and the LSH pipeline 3x — at sf1 that turned a
+    # ~75 s check into 445 s. The LSH pairs come back checkpointed and
+    # the exact pairs are cached: the small RESULT pair lists, not the
+    # quadratic intermediates.
     approx = (
         minhash_near_duplicates(
-            docs, "text", "doc_id", threshold=0.05, num_hashes=32, bands=16,
-            eager_release=True,
+            docs, "text", "doc_id", threshold=0.05, num_hashes=32, bands=16
         )
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     )
-    exact = (
-        ngram_jaccard_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b", "jaccard")
-        .persist()
-    )
-    try:
+    with cached(
+        ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
+    ) as exact:
         exact_hi = exact.where(F.col("jaccard") >= 0.15).select(
             "doc_a", "doc_b"
         )
@@ -4506,8 +4497,6 @@ def minhash_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact.select("doc_a", "doc_b"), ["doc_a", "doc_b"]
         ).count()
         hits_hi = approx.join(exact_hi, ["doc_a", "doc_b"]).count()
-    finally:
-        exact.unpersist(blocking=False)
     return local_df(spark, 
         [(n_exact, n_hi, hits_all == n_approx, hits_hi / max(n_hi, 1) >= 0.9)],
         "n_exact_pairs bigint, n_exact_hi_pairs bigint, "
@@ -4734,9 +4723,7 @@ def time_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     HashAggregate, so the fact table is read once for all three grains
     (the naive 3-query UNION reads it three times). The oracle is the
     equivalent UNION for clarity; results are identical."""
-    ev = _t(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_ev_rollup")
-    out = spark.sql(
+    return spark.sql(
         """
         SELECT CASE
                  WHEN h IS NOT NULL THEN 'hour'
@@ -4748,12 +4735,12 @@ def time_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT date_trunc('hour', ts) AS h, date_trunc('day', ts) AS d,
                    date_trunc('month', ts) AS m
-            FROM _ev_rollup
+            FROM {events}
         )
         GROUP BY GROUPING SETS ((h), (d), (m))
-        """
+        """,
+        events=_t(spark, sf_dir, "events"),
     )
-    return out
 
 
 @register(
@@ -7383,19 +7370,17 @@ def semantic_dedup_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     cells = cluster_embeddings(emb, vec_col="embedding", id_col="vec_id",
                                k=8, seed=42)
-    # one assignment frame feeds BOTH strategies (persist: the k-means
-    # transform + join otherwise re-executes per consuming action)
-    with_cells = emb.join(cells, "vec_id").persist()
-    joined = semantic_dedup(
-        with_cells, "vec_id", "embedding", threshold=0.35,
-        cell_col="cluster",
-    )
-    try:
-        # eager_release: materialize the verdicts once for the three
-        # actions below and drop the kernel's own corpus cache
+    # one assignment frame feeds BOTH strategies (cached: the k-means
+    # transform + join otherwise re-executes per consuming action); both
+    # verdict frames come back checkpointed for the actions below
+    with cached(emb.join(cells, "vec_id")) as with_cells:
+        joined = semantic_dedup(
+            with_cells, "vec_id", "embedding", threshold=0.35,
+            cell_col="cluster",
+        )
         blocked = semantic_dedup(
             with_cells, "vec_id", "embedding", threshold=0.35,
-            cell_col="cluster", strategy="blocked", eager_release=True,
+            cell_col="cluster", strategy="blocked",
         )
         b = blocked.select(
             "vec_id", F.col("cell").alias("c_b"), F.col("kept").alias("k_b")
@@ -7416,8 +7401,6 @@ def semantic_dedup_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_points = emb.count()
         n_verdicts = blocked.count()
         n_cells = blocked.select("cell").distinct().count()
-    finally:
-        with_cells.unpersist(blocking=False)
     return local_df(spark, 
         [(n_points, n_verdicts, n_cells <= 8, mism, mism == 0)],
         "n_points bigint, n_verdicts bigint, cells_le_k boolean, "
@@ -7451,7 +7434,6 @@ def ivf_state_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _ann_queries(emb, sf_dir)
     # same memoized fit as ivf_ann_topk — the state under test IS that
     # model state, materialized to a (cell, centroid) table
-    derived = ivf_ann_topk_query(spark, sf_dir).persist()
     cents = _ivf_centroids_for(spark, sf_dir)
     centroid_state = local_df(spark, 
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -7460,9 +7442,10 @@ def ivf_state_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments = ivf_assign_batch(emb, centroid_state)
     via_state = ivf_topk_from_state(
         assignments, centroid_state, q, k=5, n_probe=8
-    ).persist()
-    exact = embedding_cosine_topk(spark, sf_dir).select("q_id", "c_id").persist()
-    try:
+    )
+    derived = ivf_ann_topk_query(spark, sf_dir)
+    exact = embedding_cosine_topk(spark, sf_dir).select("q_id", "c_id")
+    with cached(derived), cached(via_state), cached(exact):
         mism = (
             via_state.join(
                 derived, ["q_id", "c_id"], "full"
@@ -7477,10 +7460,6 @@ def ivf_state_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             via_state.select("q_id", "c_id"), ["q_id", "c_id"]
         ).count()
         n_queries = exact.select("q_id").distinct().count()
-    finally:
-        exact.unpersist(blocking=False)
-        via_state.unpersist(blocking=False)
-        derived.unpersist(blocking=False)
     return local_df(spark, 
         [(n_queries, 5, mism, mism == 0, hits / total >= 0.7)],
         "n_queries bigint, k int, n_mismatched bigint, "
@@ -7603,13 +7582,14 @@ def bloom_state_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(os.path.join(state_dir, "words")),
             spark.read.parquet(os.path.join(state_dir, "pairs")),
         )
-        via_state = bloom_decontaminate(
-            corpus, state=stored, text_col="text", id_col="doc_id"
-        ).persist()
         inline = bloom_decontaminate(
             corpus, ref, "text", "doc_id", n=5, prefix=200
         )
-        try:
+        with cached(
+            bloom_decontaminate(
+                corpus, state=stored, text_col="text", id_col="doc_id"
+            )
+        ) as via_state:
             mism = (
                 via_state.join(inline, "doc_id", "full")
                 .where(
@@ -7621,8 +7601,6 @@ def bloom_state_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum("n_overlap").alias("total_overlap"),
             ).collect()[0]
-        finally:
-            via_state.unpersist(blocking=False)
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
     return local_df(spark, 
@@ -7992,14 +7970,13 @@ def bloom_append_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_decontaminate_state(ref_a, "text", "doc_id", m_bits=m_bits),
         ref_b,
     )
-    via_appended = bloom_decontaminate(corpus, state=appended).persist()
     one_shot = bloom_decontaminate(
         corpus,
         state=bloom_decontaminate_state(
             ref_all, "text", "doc_id", m_bits=m_bits
         ),
     )
-    try:
+    with cached(bloom_decontaminate(corpus, state=appended)) as via_appended:
         mism = (
             via_appended.join(one_shot, "doc_id", "full")
             .where(
@@ -8011,8 +7988,6 @@ def bloom_append_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_overlap").alias("total_overlap"),
         ).collect()[0]
-    finally:
-        via_appended.unpersist(blocking=False)
     return local_df(spark, 
         [(int(agg["n_docs"]), int(agg["total_overlap"]), mism, mism == 0)],
         "n_docs bigint, total_overlap bigint, n_mismatched bigint, "

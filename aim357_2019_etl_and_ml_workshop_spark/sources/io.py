@@ -17,7 +17,8 @@ from __future__ import annotations
 import os
 import threading
 from collections import OrderedDict
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,6 +188,23 @@ def clear_reader_cache() -> None:
     service, or after rewriting a table in place)."""
     with _MEMO_LOCK:
         _MEMO.clear()
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """The package's one owner of persisted frames: persist ``df`` on
+    entry, yield it, unpersist it on exit (also on error), so no call
+    leaves a cached frame behind in a long-lived session. Release is by
+    the persisted original, never a frame derived from it (unpersist
+    matches plans, so releasing a reassigned frame would silently do
+    nothing). A result that depends on the cached frame must not escape
+    the block lazily: return ``out.localCheckpoint(eager=True)`` from
+    inside it, or the caller's action recomputes what the cache held."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=False)
 
 
 def spread_for_cpu(df: DataFrame) -> DataFrame:

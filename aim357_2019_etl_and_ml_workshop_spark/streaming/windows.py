@@ -77,19 +77,6 @@ def dedup_stream(
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(id_cols)
 
 
-def run_stream_to_memory(
-    result: DataFrame, query_name: str, mode: str = "update"
-) -> "object":
-    """Test/dev sink: run the streaming aggregation into an in-memory table.
-    Production sinks are parquet/kafka via the same writeStream contract."""
-    return (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .start()
-    )
-
-
 def stream_stream_join(
     left: DataFrame,
     right: DataFrame,

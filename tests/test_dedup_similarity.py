@@ -1287,7 +1287,6 @@ def test_banded_pairs_subset_of_exact_on_testdata(spark, sf_dir):
             threshold=0.05,
             num_hashes=32,
             bands=16,
-            eager_release=True,
         ).collect()
     }
     assert banded, "banded path found nothing — test corpus regressed"
@@ -1315,7 +1314,7 @@ def test_skew_split_boilerplate_regime_pair_set_equal(spark):
             for i in range(40)
         ]
     )
-    kw = dict(max_hamming=3, chunks=4, eager_release=True)
+    kw = dict(max_hamming=3, chunks=4)
     plain = {
         (r.id_a, r.id_b, r.hamming)
         for r in simhash_near_duplicates(docs, "text", "doc_id", **kw).collect()
@@ -1492,10 +1491,10 @@ def test_semantic_dedup_blocked_real_embeddings_and_string_ids(spark, sf_dir):
 
 
 def test_semantic_dedup_eager_release_frees_corpus_cache(spark):
-    """VERDICT r07 wrong #2 / ADVICE r07: eager_release=True must leave no
-    corpus-scale cached frame behind. Both strategies persist a corpus
-    projection carrying the full vectors (~n*dim*8 bytes); with
-    eager_release the only surviving persistent RDD is the narrow verdict
+    """VERDICT r07 wrong #2 / ADVICE r07: semantic_dedup must leave no
+    corpus-scale cached frame behind. Both strategies cache a corpus
+    projection carrying the full vectors (~n*dim*8 bytes) for the call;
+    the only surviving persistent RDD is the narrow verdict
     localCheckpoint — delta-counted against the session's pre-existing
     caches and bounded in bytes well below the vector cache's size."""
     import numpy as np
@@ -1531,7 +1530,7 @@ def test_semantic_dedup_eager_release_frees_corpus_cache(spark):
         before = persistent_ids()
         out = semantic_dedup(
             df, "vec_id", "embedding", threshold=0.99, n_sign_dims=3,
-            strategy=strategy, eager_release=True,
+            strategy=strategy,
         )
         assert out.count() == n  # already materialized by the checkpoint
         new = persistent_ids() - before

@@ -2,7 +2,8 @@
 reader, spread decisions, fitted IVF centroids and BPE merges) in one
 bounded memo, sources.io._MEMO, with one clear path. These tests pin that
 clear_reader_cache() invalidates everything derived from a source
-directory, and that no second module-level memo grows back."""
+directory, and that no second module-level memo grows back. Persisted
+frames likewise have one owner, sources.io.cached."""
 
 from __future__ import annotations
 
@@ -186,3 +187,38 @@ def test_one_memo_store_in_the_package():
         ]
     assert found - _NOT_MEMOS == _MEMOS
     assert cached_fns == []
+
+
+# The one owner of persisted frames, and the gather-broadcast LRU (which
+# unpersists evicted JVM broadcasts, not DataFrames).
+_CACHE_OWNERS = {
+    ("sources/io.py", "cached"),
+    ("operators/similarity.py", "_gather_broadcast"),
+}
+
+
+def test_one_cache_owner_in_the_package():
+    """Every persisted frame in the package is owned by sources.io.cached,
+    which releases it when its block exits: no other persist/cache/
+    unpersist call may appear, so no operator can leave a cached frame
+    behind in a long-lived session."""
+    root = Path(pkg.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        owners = [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and (rel, n.name) in _CACHE_OWNERS
+        ]
+        allowed = {id(c) for o in owners for c in ast.walk(o)}
+        stray += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("persist", "cache", "unpersist")
+            and id(n) not in allowed
+        ]
+    assert stray == []

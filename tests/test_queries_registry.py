@@ -2,6 +2,8 @@
 aliased schema the oracle expects; plan-shape checks assert the 100TB
 posture (pushdown, pruning, broadcast)."""
 
+import re
+
 import pytest
 
 from aim357_2019_etl_and_ml_workshop_spark import queries as q
@@ -10,6 +12,7 @@ from aim357_2019_etl_and_ml_workshop_spark.plans import (
     scan_read_schema,
     uses_broadcast_join,
 )
+from aim357_2019_etl_and_ml_workshop_spark.sources.io import TESTDATA_TABLES
 
 ALL = sorted(q.queries())
 
@@ -44,12 +47,26 @@ def test_every_query_has_oracle_or_is_flagged():
     assert stale == [], f"ROWS_ONLY entries that now have oracles: {stale}"
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.mark.parametrize("name", ALL)
 def test_query_runs_smoke(spark, sf_dir, name):
+    """Every query runs and collects, and leaves no state behind in the
+    long-lived session: no persisted frame in the session's cache
+    registry and no temp view beyond the SQL surface's table views."""
+    spark.catalog.clearCache()
+    views = _temp_views(spark)
     df = q.queries()[name](spark, sf_dir)
     rows = df.limit(2000).collect()
     assert len(rows) >= 0  # runs and collects
     assert len(df.columns) > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a persisted frame in the cache registry"
+    )
+    added = _temp_views(spark) - views - set(TESTDATA_TABLES)
+    assert not added, f"{name} left temp views {sorted(added)}"
 
 
 def test_strict_range_pushdown(spark, sf_dir):
@@ -141,12 +158,24 @@ def test_minhash_plan_shares_shingle_table(spark, sf_dir):
     explode/banding from the source (pre-sharing, the plan re-scanned the
     source 14 times with zero reuse). InMemoryTableScan nodes must appear
     for all shared consumers (signatures/sizes/verify sides + candidate
-    uses)."""
-    df = q.queries()["minhash_near_duplicates"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 4, (
-        "shingle/candidate cache sharing regressed"
+    uses). The pipeline runs inside the call (its caches are released
+    when it returns a checkpointed result), so the plans checked are the
+    ones the call executed, read from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        xs = store.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    before = {e.executionId() for e in executions()}
+    q.queries()["minhash_near_duplicates"](spark, sf_dir)
+    scans = sum(
+        len(set(re.findall(r"InMemoryTableScan \((\d+)\)",
+                           e.physicalPlanDescription())))
+        for e in executions()
+        if e.executionId() not in before
     )
+    assert scans >= 4, "shingle/candidate cache sharing regressed"
 
 
 def test_reader_cache_bounded(spark, sf_dir, monkeypatch):

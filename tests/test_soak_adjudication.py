@@ -23,6 +23,10 @@ class FakeSession:
         self.log = log
         self.tag = tag
         self.catalog = SimpleNamespace(clearCache=lambda: None)
+        registry = SimpleNamespace(isEmpty=lambda: True)
+        self._jsparkSession = SimpleNamespace(
+            sharedState=lambda: SimpleNamespace(cacheManager=lambda: registry)
+        )
 
     def stop(self):
         self.log.append(("stop", self.tag))
@@ -86,7 +90,7 @@ def test_run_suite_recycles_session(spark, tmp_path, monkeypatch):
     registry = {
         f"q{i}": (lambda s, d: spark.range(5)) for i in range(5)
     }
-    times, errors, loads, last = soak.run_suite(
+    times, errors, loads, cache_left, last = soak.run_suite(
         FakeSession(log, "s0"),
         registry,
         "unused",
@@ -94,7 +98,7 @@ def test_run_suite_recycles_session(spark, tmp_path, monkeypatch):
         session_factory=factory,
         recycle_every=2,
     )
-    assert not errors and len(times) == 5
+    assert not errors and len(times) == 5 and cache_left == []
     starts = [t for ev, t in log if ev == "start"]
     stops = [t for ev, t in log if ev == "stop"]
     assert starts == ["s1", "s2"]  # two recycles across 5 queries
@@ -110,7 +114,7 @@ def test_run_suite_recycle_disabled(spark, tmp_path, monkeypatch):
     )
     log = []
     registry = {f"q{i}": (lambda s, d: spark.range(5)) for i in range(3)}
-    _, errors, _, last = soak.run_suite(
+    _, errors, _, _, last = soak.run_suite(
         FakeSession(log, "s0"), registry, "unused", sweep="sf10",
         session_factory=lambda: FakeSession(log, "sX"),
         recycle_every=0,
@@ -118,3 +122,26 @@ def test_run_suite_recycle_disabled(spark, tmp_path, monkeypatch):
     assert not errors
     assert log == []  # no restarts when disabled
     assert last.tag == "s0"
+
+
+def test_run_suite_records_cache_left(spark, tmp_path, monkeypatch):
+    """The sweep clears the session cache after every query; it must
+    first record which query left a persisted frame behind, and keep the
+    record across a checkpoint resume."""
+    monkeypatch.setenv(
+        "SPARK_GRAFT_SOAK_CKPT", str(tmp_path / "ckpt.jsonl")
+    )
+    registry = {
+        "leaky": lambda s, d: s.range(5).persist(),
+        "clean": lambda s, d: s.range(5),
+    }
+    times, errors, _, cache_left, _ = soak.run_suite(
+        spark, registry, "unused", sweep="sf1", recycle_every=0
+    )
+    assert not errors and len(times) == 2
+    assert cache_left == ["leaky"]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    _, _, _, resumed, _ = soak.run_suite(
+        spark, registry, "unused", sweep="sf1", recycle_every=0
+    )
+    assert resumed == ["leaky"]

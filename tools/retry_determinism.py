@@ -121,21 +121,21 @@ def main() -> None:
         q._t = real_t
 
         # SHUFFLE-STAGE probe (VERDICT r06 #7): the scan-stage injection
-        # above re-runs MAP tasks; this one re-runs a task BELOW the
-        # banded dedup's exchanges — minhash_lsh_candidates' returned
-        # frame is post-(band equi-join + distinct), so the fail-once
-        # kernel's stage consumes shuffled map outputs and its retry is a
-        # genuine post-exchange recompute. This is the class where
-        # non-deterministic candidate ORDERING (bucket join emission
-        # order) would actually bite the verify/aggregate downstream.
+        # above re-runs MAP tasks; this one re-runs a task BELOW an
+        # exchange — minhash_signatures_from_shingles' returned frame is
+        # post-(per-doc min-hash groupBy), so the fail-once kernel's
+        # stage consumes shuffled map outputs and its retry is a genuine
+        # post-exchange recompute feeding the banding, candidate join and
+        # verify. This is the class where non-deterministic row ORDER
+        # after a shuffle would actually bite the banded dedup downstream.
         from aim357_2019_etl_and_ml_workshop_spark.operators import (
             dedup as dd,
         )
 
-        real_cand = dd.minhash_lsh_candidates
+        real_sigs = dd.minhash_signatures_from_shingles
 
-        def patched_cand(*a, **kw):
-            return fail_once_wrap(real_cand(*a, **kw))
+        def patched_sigs(*a, **kw):
+            return fail_once_wrap(real_sigs(*a, **kw))
 
         fn = reg["minhash_near_duplicates"]
         res = {}
@@ -145,14 +145,14 @@ def main() -> None:
             res["clean"] = out["minhash_near_duplicates"]["clean"]
         else:
             res["clean"] = df_value_hash(fn(spark, sf_dir))
-        dd.minhash_lsh_candidates = patched_cand
+        dd.minhash_signatures_from_shingles = patched_sigs
         try:
             res["wrapped"] = df_value_hash(fn(spark, sf_dir))
             _STATE["fail"] = True
             res["retried"] = df_value_hash(fn(spark, sf_dir))
             _STATE["fail"] = False
         finally:
-            dd.minhash_lsh_candidates = real_cand
+            dd.minhash_signatures_from_shingles = real_sigs
         out["shuffle_stage:minhash_near_duplicates"] = res
     finally:
         q._t = real_t

@@ -18,6 +18,12 @@ Long soaks survive process churn via a JSONL checkpoint
 completed query per sweep; a rerun loads it and skips what's already
 timed, so an external kill mid-sweep costs only the in-flight query.
 
+Cache hygiene: the sweep clears the session cache after every query,
+which would hide a query that leaves a persisted frame behind, so each
+query first records whether the cache registry was non-empty; the
+names land in each sweep's ``cache_left`` and their count in the
+summary.
+
 Contention protocol (r11, VERDICT r10 #6): each sweep starts behind an
 exclusive-box guard (bounded wait for zero competing runnable processes;
 SPARK_GRAFT_SOAK_NO_WAIT=1 waives it, recorded), every query records a
@@ -265,10 +271,11 @@ def _ckpt_path() -> str:
     )
 
 
-def _ckpt_load(sweep: str) -> tuple[dict, dict, dict]:
+def _ckpt_load(sweep: str) -> tuple[dict, dict, dict, list]:
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
     loads: dict[str, dict] = {}
+    cache_left: list[str] = []
     path = _ckpt_path()
     if os.path.exists(path):
         with open(path) as f:
@@ -283,9 +290,11 @@ def _ckpt_load(sweep: str) -> tuple[dict, dict, dict]:
                     times[rec["name"]] = rec["sec"]
                     if "load" in rec:
                         loads[rec["name"]] = rec["load"]
+                    if rec.get("cache_left"):
+                        cache_left.append(rec["name"])
                 else:
                     errors[rec["name"]] = rec.get("err", "?")
-    return times, errors, loads
+    return times, errors, loads, cache_left
 
 
 def _ckpt_append(rec: dict) -> None:
@@ -295,7 +304,7 @@ def _ckpt_append(rec: dict) -> None:
         f.write(json.dumps(rec) + "\n")
 
 
-def _drain_session_pressure(spark, done: int) -> None:
+def _drain_session_pressure(spark, done: int) -> bool:
     """Between-query hygiene for a several-hundred-query single-JVM
     session (VERDICT r09 next #2: substring_dedup_rewrite hit a one-shot
     'Not enough memory to build and broadcast' after ~170 prior queries —
@@ -306,7 +315,15 @@ def _drain_session_pressure(spark, done: int) -> None:
     then a JVM System.gc() lets ContextCleaner observe the now-unreferenced
     broadcast ids and evict their driver-side blocks. Every query would
     be wasteful (full GC pauses); every 20 keeps the resident broadcast
-    set bounded by one window's worth instead of the whole sweep's."""
+    set bounded by one window's worth instead of the whole sweep's.
+
+    Returns whether the query left a persisted frame in the session's
+    cache registry, read BEFORE clearCache would hide it. The registry
+    smoke test checks the same at sf0.001, but size-dependent branches
+    (connected_components' pointer jumping above the union-find
+    threshold, _collect_gather's join-attach fallback) only run at soak
+    scales, so only the soak can see a leak there."""
+    cache_left = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
     spark.catalog.clearCache()
     if done % 20 == 0:
         import gc
@@ -316,6 +333,7 @@ def _drain_session_pressure(spark, done: int) -> None:
             spark.sparkContext._jvm.System.gc()
         except Exception:
             pass  # py4j hiccup: hygiene only, never fail the sweep
+    return cache_left
 
 
 def adjudicate_flag(
@@ -367,11 +385,11 @@ def run_suite(
     order_salt: str = "",
     session_factory=None,
     recycle_every: int | None = None,
-) -> tuple[dict, dict, dict, object]:
+) -> tuple[dict, dict, dict, list, object]:
     factory = session_factory or (lambda: get_spark("registry-soak"))
     recycle = _recycle_every() if recycle_every is None else recycle_every
     since_restart = 0
-    times, errors, loads = _ckpt_load(sweep)
+    times, errors, loads, cache_left = _ckpt_load(sweep)
     if times or errors:
         print(
             f"  [resume] {len(times)} timed + {len(errors)} errored "
@@ -396,11 +414,13 @@ def run_suite(
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             times[name] = round(time.perf_counter() - t0, 2)
+            left = _drain_session_pressure(spark, len(times))
+            if left:
+                cache_left.append(name)
             _ckpt_append(
                 {"sweep": sweep, "name": name, "sec": times[name],
-                 "load": snap}
+                 "load": snap, "cache_left": left}
             )
-            _drain_session_pressure(spark, len(times))
             since_restart += 1
             if recycle and since_restart >= recycle:
                 # periodic session recycle (r12, VERDICT r11 #4): bound
@@ -428,7 +448,7 @@ def run_suite(
         print(
             f"  {name}: {times.get(name, 'ERROR')}s", file=sys.stderr, flush=True
         )
-    return times, errors, loads, spark
+    return times, errors, loads, cache_left, spark
 
 
 def main() -> None:
@@ -453,12 +473,12 @@ def main() -> None:
     }
     print(f"sf1 sweep ({len(registry)} queries)", file=sys.stderr)
     guard1 = _wait_for_quiet("sf1")
-    t1, e1, l1, spark = run_suite(
+    t1, e1, l1, c1, spark = run_suite(
         spark, registry, sf1_dir, "sf1", order_salt=out_path
     )
     print(f"sf10 sweep ({len(registry)} queries)", file=sys.stderr)
     guard10 = _wait_for_quiet("sf10")
-    t10, e10, l10, spark = run_suite(
+    t10, e10, l10, c10, spark = run_suite(
         spark, registry, sf10_dir, "sf10", order_salt=out_path
     )
 
@@ -505,14 +525,18 @@ def main() -> None:
         "exclusive_box_guard": {"sf1": guard1, "sf10": guard10},
         "session_recycle_every": _recycle_every(),
         "sf1": {"dir": sf1_dir, "total_sec": round(sum(t1.values()), 1),
-                "queries": t1, "errors": e1, "loads": l1},
+                "queries": t1, "errors": e1, "loads": l1, "cache_left": c1},
         "sf10": {"dir": sf10_dir, "total_sec": round(sum(t10.values()), 1),
-                 "queries": t10, "errors": e10, "loads": l10},
+                 "queries": t10, "errors": e10, "loads": l10,
+                 "cache_left": c10},
         "superlinear_flags": flags,
         "summary": {
             "queries_run": len(registry),
             "sf1_errors": len(e1),
             "sf10_errors": len(e10),
+            # queries that left a persisted frame behind (names per sweep)
+            "sf1_cache_left": len(c1),
+            "sf10_cache_left": len(c10),
             "flags": len(flags),
         },
     }
